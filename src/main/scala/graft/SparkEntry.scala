@@ -273,11 +273,17 @@ object SparkEntry {
   }
 
   /** Root of the read-only reference checkout. The real-artifact parity
-    * queries (s14/s15) parse the ACTUAL reference config/model files
-    * through the same loaders the pipeline uses — overridable for
-    * environments that stage the checkout elsewhere. */
+    * queries ([[referenceQueries]]) parse the ACTUAL reference
+    * config/model files through the same loaders the pipeline uses —
+    * overridable for environments that stage the checkout elsewhere. */
   private[graft] lazy val referenceDir: String =
     sys.env.getOrElse("GRAFT_REFERENCE_DIR", "/root/reference")
+
+  /** The queries that read the reference checkout through [[refArtifact]]:
+    * their one external input. They stay in [[queries]] and [[oracleSql]]
+    * like every other query; a host without the checkout cannot run them. */
+  val referenceQueries: Set[String] = Set("s14_real_model", "s15_dict_drift",
+    "s17_date_render", "v16_real_config_e2e", "v17_real_v12_config_e2e")
 
   /** Read a small driver-side config artifact (YAML dict/model files are
     * config plane, never data plane — single-digit-KB to ~100 KB). */
@@ -293,8 +299,8 @@ object SparkEntry {
     val p = java.nio.file.Paths.get(referenceDir, rel)
     require(java.nio.file.Files.exists(p),
       s"reference artifact missing: $p — the real-artifact queries " +
-        "(s14/s15/s17) read the reference checkout; point " +
-        "GRAFT_REFERENCE_DIR at its root (default /root/reference)")
+        s"(${referenceQueries.toSeq.sorted.mkString(", ")}) read the " +
+        "reference checkout; point GRAFT_REFERENCE_DIR at its root")
     p.toString
   }
 

@@ -1,11 +1,79 @@
 package graft
 
 /** Smoke: every SparkEntry query runs against sf0.001 and returns rows;
-  * every query with an oracle has matching column names (the driver's
-  * compare sorts columns by name before hashing). */
+  * every query with an oracle gives the same values on two runs. The
+  * queries that read the reference checkout
+  * ([[SparkEntry.referenceQueries]]) are checked by their own tests, which
+  * are cancelled on a host that has no checkout configured. */
 class EntrySpec extends SparkSpec {
+  import EntrySpec._
 
   private val sf = "/root/testdata/sf0.001"
+
+  private def attempt[A](body: => A): Either[Throwable, A] =
+    try Right(body) catch { case e: Throwable => Left(e) }
+
+  /** A query's values, columns sorted by name and rows sorted: the form the
+    * driver hash-compares. */
+  private def values(name: String): Values = {
+    val df = SparkEntry.queries(name)(spark, sf)
+    val cols = df.columns.sorted.toIndexedSeq
+    df.collect().map(r => cols.map(c =>
+      String.valueOf(r.get(r.fieldIndex(c))))).toSeq.sortBy(_.mkString(""))
+  }
+
+  /** One pass over a set of queries in name order, shared by the "runs" and
+    * the determinism test: each oracle-gated query is collected twice (the
+    * first collect also gives its row count), every other query is counted
+    * once. Errors are kept per query, so one that throws hides none sorted
+    * after it. */
+  private def sweep(names: Set[String]): Seq[(String, Runs)] =
+    names.toSeq.sorted.map { name =>
+      val runs =
+        if (SparkEntry.oracleSql.contains(name)) {
+          val first = attempt(values(name))
+          Runs(first.map(_.size.toLong), Some((first, attempt(values(name)))))
+        } else Runs(attempt(SparkEntry.queries(name)(spark, sf).count()), None)
+      name -> runs
+    }
+
+  private lazy val localSweep =
+    sweep(SparkEntry.queries.keySet -- SparkEntry.referenceQueries)
+  private lazy val referenceSweep = sweep(SparkEntry.referenceQueries)
+
+  private def runFailures(sweep: Seq[(String, Runs)]): Seq[String] =
+    sweep.flatMap {
+      case (name, Runs(Left(e), _)) => Some(s"$name: ${e.getMessage}")
+      case (name, Runs(Right(0L), _)) if name != "v2_missing_parents" =>
+        Some(s"$name: 0 rows")
+      case _ => None
+    }
+
+  /** The gated queries of a sweep that threw in either run, and those whose
+    * two runs gave different values. */
+  private def nondeterminism(sweep: Seq[(String, Runs)]): (Seq[String], Seq[String]) = {
+    val twice = sweep.collect { case (name, Runs(_, Some(pair))) => name -> pair }
+    val errors = twice.collect {
+      case (name, (Left(e), _)) => s"$name: ${e.getMessage}"
+      case (name, (_, Left(e))) => s"$name (second run): ${e.getMessage}"
+    }
+    val flaky = twice.collect {
+      case (name, (Right(a), Right(b))) if a != b => name
+    }
+    (errors, flaky)
+  }
+
+  /** The reference queries need the reference checkout. Cancel their tests
+    * only where none is configured; once GRAFT_REFERENCE_DIR is set or the
+    * default directory exists, a missing artifact fails them. */
+  private def assumeReferenceCheckout(): Unit =
+    // cancel rather than assume(...): assume's message would print the
+    // whole environment map of the failed sys.env.contains
+    if (!sys.env.contains("GRAFT_REFERENCE_DIR") &&
+        !new java.io.File(SparkEntry.referenceDir).exists)
+      cancel(s"no reference checkout at ${SparkEntry.referenceDir}: " +
+        SparkEntry.referenceQueries.toSeq.sorted.mkString(", ") +
+        " read it; set GRAFT_REFERENCE_DIR to its root to run them")
 
   test("events table loads despite TIMESTAMP(NANOS) and has a timestamp ts") {
     val df = Tables.load(spark, sf, "events")
@@ -45,12 +113,13 @@ class EntrySpec extends SparkSpec {
   }
 
   test("every query runs and returns rows on sf0.001") {
-    val failures = SparkEntry.queries.toSeq.sortBy(_._1).flatMap { case (name, fn) =>
-      try {
-        val n = fn(spark, sf).count()
-        if (n == 0 && name != "v2_missing_parents") Some(s"$name: 0 rows") else None
-      } catch { case e: Throwable => Some(s"$name: ${e.getMessage}") }
-    }
+    val failures = runFailures(localSweep)
+    assert(failures.isEmpty, failures.mkString("; "))
+  }
+
+  test("every reference-checkout query runs and returns rows on sf0.001") {
+    assumeReferenceCheckout()
+    val failures = runFailures(referenceSweep)
     assert(failures.isEmpty, failures.mkString("; "))
   }
 
@@ -63,16 +132,25 @@ class EntrySpec extends SparkSpec {
     // the driver hash-compares values: any nondeterministic retention,
     // tie-break, or float rendering would flake the gate. s4 writes fresh
     // temp dirs per invocation but must yield identical values.
-    def snapshot(name: String): Seq[Seq[String]] = {
-      val df = SparkEntry.queries(name)(spark, sf)
-      val cols = df.columns.sorted.toIndexedSeq
-      df.collect().map(r => cols.map(c =>
-        String.valueOf(r.get(r.fieldIndex(c))))).toSeq.sortBy(_.mkString(""))
-    }
-    val flaky = SparkEntry.oracleSql.keySet.toSeq.sorted.flatMap { name =>
-      if (snapshot(name) != snapshot(name)) Some(name) else None
-    }
+    val (errors, flaky) = nondeterminism(localSweep)
+    assert(errors.isEmpty, errors.mkString("; "))
     assert(flaky.isEmpty, s"nondeterministic queries: $flaky")
+  }
+
+  test("every reference-checkout query is run-to-run deterministic (value sets)") {
+    assumeReferenceCheckout()
+    val (errors, flaky) = nondeterminism(referenceSweep)
+    assert(errors.isEmpty, errors.mkString("; "))
+    assert(flaky.isEmpty, s"nondeterministic queries: $flaky")
+  }
+
+  test("the reference-checkout queries are declared queries with oracles") {
+    // a renamed query must not silently drop out of both sweeps
+    val ref = SparkEntry.referenceQueries
+    assert((ref -- SparkEntry.queries.keySet).isEmpty &&
+      (ref -- SparkEntry.oracleSql.keySet).isEmpty,
+      s"undeclared reference queries: ${ref -- SparkEntry.queries.keySet} " +
+        s"(no query), ${ref -- SparkEntry.oracleSql.keySet} (no oracle)")
   }
 
   test("query id prefixes are unique (the bench abbrev tier depends on it)") {
@@ -83,4 +161,14 @@ class EntrySpec extends SparkSpec {
     val dupes = prefixes.groupBy(identity).filter(_._2.size > 1).keys
     assert(dupes.isEmpty, s"colliding query id prefixes: ${dupes.mkString(", ")}")
   }
+}
+
+object EntrySpec {
+  type Values = Seq[Seq[String]]
+
+  /** One query's runs in a sweep: the first run (its row count, or what it
+    * threw) and, for an oracle-gated query, the value sets of two
+    * independent runs. */
+  final case class Runs(rows: Either[Throwable, Long],
+      twice: Option[(Either[Throwable, Values], Either[Throwable, Values])])
 }
