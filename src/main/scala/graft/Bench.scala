@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 
 /** Benchmark main (driver contract): runs every SparkEntry query against
   * SPARK_GRAFT_SF_DIR and prints ONE JSON line with per-query seconds.
@@ -20,19 +19,9 @@ import org.apache.spark.sql.SparkSession
 object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
+    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt
     val passes = sys.env.getOrElse("SPARK_GRAFT_BENCH_PASSES", "2").toInt
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      // the k-NN paths rank via an object-typed top-k aggregate; the
-      // default 128-group threshold would push every partition into the
-      // sort-based fallback (buffers are ~16·k bytes, so memory is safe)
-      .config("spark.sql.objectHashAggregate.sortBased.fallbackThreshold", "65536")
-      .config("spark.sql.extensions", "graft.GraftExtensions")
-      .getOrCreate()
+    val spark = GraftSession.builder(cpus).getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
 
     // warmup: touch every table's footer + spin up codegen/JIT once

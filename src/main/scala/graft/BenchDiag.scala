@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.lang.management.ManagementFactory
 import scala.jdk.CollectionConverters._
 
@@ -12,15 +11,9 @@ import scala.jdk.CollectionConverters._
 object BenchDiag {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
+    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt
     val passes = sys.env.getOrElse("SPARK_GRAFT_BENCH_PASSES", "2").toInt
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.objectHashAggregate.sortBased.fallbackThreshold", "65536")
-      .getOrCreate()
+    val spark = GraftSession.builder(cpus).getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
 
     Tables.all.foreach { t =>

@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 
 /** Dev sweep tool (guide §7.2): dump `.explain("formatted")` for every
   * declared query to <outDir>/<name>.txt, then grep the set for plan
@@ -14,14 +13,8 @@ object ExplainAll {
     val sfDir = if (args.length > 1) args(1) else "/root/testdata/sf0.1"
     val only: Option[Set[String]] =
       if (args.length > 2) Some(args(2).split(",").toSet) else None
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder().master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.objectHashAggregate.sortBased.fallbackThreshold", "65536")
-      .config("spark.sql.extensions", "graft.GraftExtensions")
-      .getOrCreate()
+    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt
+    val spark = GraftSession.builder(cpus).getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
     Tables.all.foreach(t => try Tables.load(spark, sfDir, t).limit(1).count() catch { case _: Throwable => () })
     new java.io.File(outDir).mkdirs()

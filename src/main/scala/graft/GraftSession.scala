@@ -50,16 +50,20 @@ object GraftSession {
     spark
   }
 
-  /** Local session with `cores` threads — the shape the bench and verify
-    * mains use; shuffle partitions sized to the core count (a 200-way
-    * shuffle of a laptop-sized table is pure overhead; on a cluster set
-    * `spark.sql.shuffle.partitions` to ~2-3× total executor cores). */
-  def local(cores: Int = Runtime.getRuntime.availableProcessors()): SparkSession = {
-    val s = configure(SparkSession.builder()
+  /** Builder for a local session with `cores` threads and the engine's
+    * configs — the one place every main and the test session start
+    * from; callers add their own extras (app name, warehouse dir, read
+    * settings) before `getOrCreate`. Shuffle partitions are sized to the
+    * core count (a 200-way shuffle of a laptop-sized table is pure
+    * overhead; on a cluster set `spark.sql.shuffle.partitions` to ~2-3×
+    * total executor cores). */
+  def builder(cores: Int): SparkSession.Builder =
+    configure(SparkSession.builder()
       .master(s"local[$cores]")
       .config("spark.sql.shuffle.partitions", cores)
       .config("spark.ui.enabled", "false"))
-      .getOrCreate()
-    registerAll(s)
-  }
+
+  /** Local session with `cores` threads and the SQL surface registered. */
+  def local(cores: Int = Runtime.getRuntime.availableProcessors()): SparkSession =
+    registerAll(builder(cores).getOrCreate())
 }

@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 
 /** Dev tool: time one named query (and optionally print its plan).
   * Usage: runMain graft.QTime <queryName> [sfDir] [explain]
@@ -9,15 +8,8 @@ object QTime {
     val name = args(0)
     val sfDir = if (args.length > 1) args(1) else "/root/testdata/sf0.1"
     val doExplain = args.contains("explain")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.objectHashAggregate.sortBased.fallbackThreshold", "65536")
-      .config("spark.sql.extensions", "graft.GraftExtensions")
-      .getOrCreate()
+    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt
+    val spark = GraftSession.builder(cpus).getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
     Tables.all.foreach(t => try Tables.load(spark, sfDir, t).limit(1).count() catch { case _: Throwable => () })
     if (doExplain) SparkEntry.queries(name)(spark, sfDir).explain("formatted")

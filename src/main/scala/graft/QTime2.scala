@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 
 /** Dev tool: time one named query over several passes in ONE JVM, so the
   * cold (plan + codegen + JIT) and warm costs are visible separately —
@@ -12,14 +11,8 @@ object QTime2 {
     val sfDir = if (args.length > 1) args(1) else "/root/testdata/sf0.1"
     // honors SPARK_GRAFT_CPUS (round-20) so the sf1 scaling points can
     // compare 8 vs 32 cores with the same tool; default unchanged
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder().master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.objectHashAggregate.sortBased.fallbackThreshold", "65536")
-      .config("spark.sql.extensions", "graft.GraftExtensions")
-      .getOrCreate()
+    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt
+    val spark = GraftSession.builder(cpus).getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
     Tables.all.foreach(t => try Tables.load(spark, sfDir, t).limit(1).count() catch { case _: Throwable => () })
     for (i <- 1 to 3) {

@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
 /** Scale-slope data generator: replicates a driver-generated SF dir
@@ -47,12 +47,8 @@ object ScaleGen {
     val src = args(0)
     val out = args(1)
     val factor = if (args.length > 2) args(2).toInt else 10
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "16")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
+    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "16").toInt
+    val spark = GraftSession.builder(cpus)
       .config("spark.sql.legacy.parquet.nanosAsLong", "true")
       .getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")

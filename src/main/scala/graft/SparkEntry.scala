@@ -28,8 +28,9 @@ import graft.ext.{TextAnalysis, TextDedup, Similarity, Multimodal, EntityResolut
 object SparkEntry {
 
   /** Recall gates for e6/e7 in basis points (recall@3 vs exact on the
-    * [[VecAnchorK]]-anchored query set). Measured (graft.RecallProbe,
-    * anchored queries): LSH 3300/3946, IVF 6146/5400 at sf0.01/sf0.1
+    * [[VecAnchorK]]-anchored query set). Measured (BASELINE.md "Round-12:
+    * ANCHORED e-family truth tiers", anchored queries): LSH 3300/3946,
+    * IVF 6146/5400 at sf0.01/sf0.1
     * (under the former 20% sample: LSH 3133/4091, IVF 6400/5791 — the
     * anchored numbers sit within sampling noise of those, as the
     * unbiasedness argument predicts); gates sit below the measured floor
@@ -40,8 +41,9 @@ object SparkEntry {
   val IvfRecallMinBp = 4000
 
   /** e19 gate: the graph-augmented tier's anchored recall@3, measured
-    * 7960/7800/6466 bp at sf0.001/0.01/0.1 (GraphAnnProbe, hops=2
-    * beam=16 degree=8) vs the pure LSH seed tier's 3566/3300/3946 —
+    * 7960/7800/6466 bp at sf0.001/0.01/0.1 (BASELINE.md "Round-14: e19
+    * graph-augmented ANN", hops=2 beam=16 degree=8) vs the pure LSH seed
+    * tier's 3566/3300/3946 —
     * floor below the weakest measurement; a real regression (graph
     * build, hop join, or beam-prune bug) collapses toward the seed
     * tier or below. */
@@ -123,7 +125,8 @@ object SparkEntry {
   val ClusterRecallMinBp = 8000
 
   /** d10 gate: SimHash Hamming distance is bimodal on this corpus
-    * (graft.SimhashProbe: true near-dup pairs max 5/12 at sf0.01/sf0.1,
+    * (BASELINE.md "d10 SimHash Hamming band": true near-dup pairs max
+    * 5/12 at sf0.01/sf0.1,
     * non-dup consecutive pairs min 8/4, p50 18) — every true pair sits
     * ≤ [[SimhashHammingMax]], so measured recall is 10000 bp at both SFs;
     * the gate trips only on a real signature regression (bit mixing,
@@ -133,7 +136,8 @@ object SparkEntry {
 
   /** e8 gate: int8 per-vector-scaled quantization on 64-dim cosine is
     * near-lossless (measured recall@3 = 9840/9820 bp at sf0.01/sf0.1
-    * under the anchored query set, graft.RecallProbe); the gate trips if
+    * under the anchored query set, BASELINE.md "Round-12: ANCHORED
+    * e-family truth tiers"); the gate trips if
     * the quantize/dequantize pair starts distorting neighborhoods. */
   val QuantizedRecallMinBp = 8000
 
@@ -141,8 +145,9 @@ object SparkEntry {
     * a SHORTLIST tier — exact top-3 among this corpus' near-tied
     * within-cluster cosines is unstable under any reconstruction error
     * (measured direct recall@3: int8's 9816 bp vs PQ's 5050), so the gate
-    * measures PQ's actual contracts (graft.RecallProbe, sf0.01/sf0.1,
-    * anchored query set): true top-3 inside the PQ top-10 an ADC scan
+    * measures PQ's actual contracts (BASELINE.md "Round-12: ANCHORED
+    * e-family truth tiers", sf0.01/sf0.1, anchored query set): true
+    * top-3 inside the PQ top-10 an ADC scan
     * hands a re-ranker — queries EXACT, corpus decoded (measured
     * 9866/9306 bp; quantizing both sides would
     * measure the lower SDC quantity instead) — and mean reconstruction
@@ -152,8 +157,9 @@ object SparkEntry {
   val PqShortlistMinBp = 6000
   val PqReconMinBp = 9000
 
-  /** e14 gate (measured via RecallProbe at sf0.01/sf0.1, anchored query
-    * set): shortlist recall of the IVF-PQ composite — the exact top-3
+  /** e14 gate (BASELINE.md "Round-12: ANCHORED e-family truth tiers",
+    * sf0.01/sf0.1, anchored query set): shortlist recall of the IVF-PQ
+    * composite — the exact top-3
     * inside the ADC top-10 over nProbe=4 of 16 cells — 6040/5820 bp. The composite
     * sits below both tiers alone (cell truncation ∘ code distortion
     * compound); floor with e7's margin style so a fit/encode regression

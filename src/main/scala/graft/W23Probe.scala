@@ -10,12 +10,7 @@ import org.apache.spark.sql.SparkSession
 object W23Probe {
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.1")
-    val spark = SparkSession.builder().master("local[32]")
-      .config("spark.sql.shuffle.partitions", 32)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.objectHashAggregate.sortBased.fallbackThreshold", "65536")
-      .getOrCreate()
+    val spark = GraftSession.builder(32).getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
     Tables.all.foreach(t =>
       try Tables.load(spark, sfDir, t).limit(1).count()

@@ -291,8 +291,8 @@ object TextDedup {
     *
     * Why NOT a prefix filter (AllPairs/PPJoin — Bayardo WWW'07, Xiao
     * WWW'08): measured and rejected for the τ=0.3 regime this truth tier
-    * runs at (probe: [[graft.PrefixProbe]]). At sf1 the rarest-first
-    * prefix index still retains 72% of the pair volume (178M of 249M) and
+    * runs at (BASELINE.md "Prefix filtering at τ=0.3"). At sf1 the
+    * rarest-first prefix index still retains 72% of the pair volume (178M of 249M) and
     * yields 58M DISTINCT candidates, so the verify join would shuttle
     * ~70 GB of shingle arrays — 3–6× slower than count-based verification
     * end to end. This matches the published finding that set-similarity

@@ -172,8 +172,9 @@ object Snapshots {
     * CHECK-then-rename and the local rename is `rename(2)`, which
     * silently REPLACES an existing target — two racers could both "win"
     * the same snapshot id, one replacing the other's manifest (and
-    * tearing its checksum sidecar: the round-15 SnapshotRaceProbe
-    * caught exactly this as a lost commit + ChecksumException). The
+    * tearing its checksum sidecar: the round-15 race probe, BASELINE.md
+    * "Round-15: concurrent-committer stress probe", caught exactly this
+    * as a lost commit + ChecksumException). The
     * pointer swing likewise uses an atomic `Files.move` locally —
     * FileContext's two-step data/crc rename let one swing's data land
     * under another swing's crc. After either local op the tmp (with its

@@ -186,7 +186,11 @@ object Pipeline {
         intProps = n.props.filter(p =>
           model.propDefs.get(p).exists(_.spark ==
             org.apache.spark.sql.types.LongType)),
-        uiRequired = uiRequired.getOrElse(n.name, Nil))
+        uiRequired = uiRequired.getOrElse(n.name, Nil),
+        // V4: the reference always scans file.file_name for SSN-shaped
+        // tokens (cds_transformation_functions.py:284-299); the config
+        // has no key for it
+        ssnScanProp = if (n.name == "file" && props("file_name")) Some("file_name") else None)
     }
     (specs, cfgList("REMOVE_NODES").toSet)
   }

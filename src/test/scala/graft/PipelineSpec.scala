@@ -160,6 +160,8 @@ class PipelineSpec extends SparkSpec {
         |    Props: [phs_accession, study_name]
         |  participant:
         |    Props: [participant_id, gender]
+        |  file:
+        |    Props: [file_id, file_name, file_size]
         |Relationships:
         |  of_study:
         |    Mul: many_to_one
@@ -174,6 +176,9 @@ class PipelineSpec extends SparkSpec {
         |  participant_id: {Type: string, Key: true}
         |  gender:
         |    Enum: [Male, Female]
+        |  file_id: {Type: string, Key: true}
+        |  file_name: {Type: string}
+        |  file_size: {Type: string}
         |""".stripMargin
     val rawDictYaml =
       """study:
@@ -182,6 +187,10 @@ class PipelineSpec extends SparkSpec {
         |participant:
         |  participant_id: participant_id
         |  gender: gender
+        |file:
+        |  GUID: file_id
+        |  file_name: file_name
+        |  file_size: file_size
         |""".stripMargin
     val cleanDictYaml =
       """gender:
@@ -192,6 +201,7 @@ class PipelineSpec extends SparkSpec {
       """NODE_ID_FIELDS:
         |  study: phs_accession
         |  participant: participant_id
+        |  file: file_id
         |COMBINE_NODE:
         |  study: phs_accession
         |PARENT_MAPPING_COLUMNS:
@@ -210,6 +220,13 @@ class PipelineSpec extends SparkSpec {
       .map(r => (r.getString(0), r.getString(1))).toSet
     assert(partRows == Set(("p1", "Female"), ("p2", "Male")))
     assert(out.nodes("participant").columns.contains("study.phs_accession"))
+    // V4: the config has no key for the SSN scan; the reference always
+    // scans file.file_name, so the YAML-built file spec does too
+    assert(specs2.map(s => s.name -> s.ssnScanProp).toMap ==
+      Map("study" -> None, "participant" -> None, "file" -> Some("file_name")))
+    val ssn = out.reports("ssn_file").select("file_name", "ssn_matches").collect()
+      .map(r => (r.getString(0), r.getString(1))).toSeq
+    assert(ssn == Seq(("b 123-45-6789.bam", "123-45-6789")))
   }
 
   test("props-driven cleaning e2e: nan_value, extra_long_values, lone-TBD exemption") {

@@ -503,6 +503,57 @@ class ScaleSpec extends SparkSpec {
       "no orphan dir may survive the race")
   }
 
+  test("snapshots: racing keyed merges — disjoint keys all land, overlapping keys win or refuse, never a lost update") {
+    import graft.ops.Snapshots
+    import spark.implicits._
+    import scala.jdk.CollectionConverters._
+    val root = java.nio.file.Files.createTempDirectory("snapmergerace").toString
+    Snapshots.commitAppend((1L to 10L).map(k => (k, "seed")).toDF("k", "v"), root)
+    val threads = 4; val perThread = 3
+    def race(attempt: (Int, Int) => Unit): Unit = {
+      val pool = java.util.concurrent.Executors.newFixedThreadPool(threads)
+      try {
+        val futs = (0 until threads).map { t =>
+          pool.submit(new Runnable {
+            override def run(): Unit = for (c <- 0 until perThread) attempt(t, c)
+          })
+        }
+        futs.foreach(_.get(300, java.util.concurrent.TimeUnit.SECONDS))
+      } finally pool.shutdown()
+    }
+    // disjoint: each thread merges its own key block and retries through
+    // every lost CAS — all land
+    race { (t, c) =>
+      val df = Seq((1000L + t * 100 + c, s"m$t-$c")).toDF("k", "v")
+      Snapshots.commitMergeKeyedWithRetry(df, df.select("k").limit(0),
+        root, Seq("k"), maxAttempts = Int.MaxValue)
+      ()
+    }
+    assert(Snapshots.read(spark, root).filter("k >= 1000").count() == threads * perThread,
+      "a disjoint merge was lost")
+    // overlapping: every thread upserts the SAME keys 1..10 with conflict
+    // validation on — each attempt wins or refuses, never silently loses
+    val wins = new java.util.concurrent.ConcurrentHashMap[Long, String]()
+    val refusals = new java.util.concurrent.atomic.AtomicInteger(0)
+    race { (t, c) =>
+      val payload = s"o$t-$c"
+      val df = (1L to 10L).map(k => (k, payload)).toDF("k", "v")
+      try wins.put(Snapshots.commitMergeKeyedWithRetry(df,
+        df.select("k").limit(0), root, Seq("k")), payload)
+      catch { case _: Snapshots.MergeConflictException => refusals.incrementAndGet() }
+      ()
+    }
+    assert(wins.size + refusals.get == threads * perThread,
+      s"attempts unaccounted: ${wins.size} wins + ${refusals.get} refusals")
+    assert(!wins.isEmpty, "at least one overlapping merge must win")
+    // the contested rows are exactly the last winner's payload (no torn mix)
+    val lastWinner = wins.get(wins.keySet.asScala.max)
+    val contested = Snapshots.read(spark, root).filter("k <= 10")
+      .as[(Long, String)].collect().sortBy(_._1).toSeq
+    assert(contested == (1L to 10L).map(_ -> lastWinner),
+      s"lost/torn update: expected all 10 rows = '$lastWinner'")
+  }
+
   test("snapshots: commitMerge is one atomic upsert — replace, insert, delete; history intact") {
     import graft.ops.Snapshots
     import spark.implicits._

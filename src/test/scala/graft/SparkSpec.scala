@@ -12,16 +12,14 @@ trait SparkSpec extends AnyFunSuite with BeforeAndAfterAll {
 }
 
 object SparkSpec {
+  /** Built from the same [[GraftSession.builder]] as the mains, so the
+    * spec session differs from the bench session only in cores and the
+    * throwaway warehouse dir. */
   lazy val session: SparkSession = {
-    val s = SparkSession.builder()
-      .master("local[4]")
+    val s = GraftSession.builder(4)
       .appName("graft-test")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
       .config("spark.sql.warehouse.dir",
         java.nio.file.Files.createTempDirectory("graft_wh").toString)
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.extensions", "graft.GraftExtensions")
       .getOrCreate()
     s.sparkContext.setLogLevel("ERROR")
     s

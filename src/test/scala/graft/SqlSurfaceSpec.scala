@@ -122,6 +122,22 @@ class SqlSurfaceSpec extends SparkSpec {
         .orderBy("vec_id"))
   }
 
+  test("the spec session carries every config GraftSession.configure sets, with the same value") {
+    import org.apache.spark.sql.SparkSession
+    // record configure's keys on a builder that never builds a session
+    val set = scala.collection.mutable.LinkedHashMap.empty[String, String]
+    GraftSession.configure(new SparkSession.Builder {
+      override def config(key: String, value: String): this.type = {
+        set(key) = value
+        this
+      }
+    })
+    assert(set.contains("spark.sql.objectHashAggregate.sortBased.fallbackThreshold"))
+    val drift = set.toSeq.filterNot { case (k, v) => spark.conf.getOption(k).contains(v) }
+      .map { case (k, v) => s"$k: configure=$v spec=${spark.conf.getOption(k)}" }
+    assert(drift.isEmpty, drift.mkString("spec session drifts from GraftSession.configure: ", "; ", ""))
+  }
+
   test("GraftExtensions: kernels arrive via spark.sql.extensions, no code needed") {
     import org.apache.spark.sql.SparkSession
     // build a FRESH session (shared SparkContext) with the extensions
