@@ -1,5 +1,7 @@
 package graft
 
+import org.apache.spark.sql.SparkSession
+
 /** Benchmark main (driver contract): runs every SparkEntry query against
   * SPARK_GRAFT_SF_DIR and prints ONE JSON line with per-query seconds.
   *
@@ -24,11 +26,7 @@ object Bench {
     val spark = GraftSession.builder(cpus).getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
 
-    // warmup: touch every table's footer + spin up codegen/JIT once
-    Tables.all.foreach { t =>
-      try Tables.load(spark, sfDir, t).limit(1).count()
-      catch { case _: Throwable => () }
-    }
+    warmTables(spark, sfDir)
     // discarded warm-up pass(es) over the FULL query list (round-6 verdict,
     // "What's wrong" #2): the first pass of a cold JVM pays JIT compilation,
     // codegen-cache population, and shuffle-service spin-up that no later
@@ -41,26 +39,11 @@ object Bench {
     val warmupPasses =
       sys.env.get("SPARK_GRAFT_BENCH_WARMUP").flatMap(_.toIntOption).getOrElse(1)
 
-    // drop anything a query left pinned in the block manager so the next
-    // measurement starts from a clean executor heap (runs OUTSIDE timers).
-    // blocking=true: async removals queued up behind heavy shuffles were a
-    // prime suspect for the round-3 mid-session slowdowns — pay the wait
-    // here, untimed, instead of inside someone else's measurement.
-    def drain(): Unit = {
-      // release the dedup shingle loans first (clears TextDedup's
-      // registry; the generic sweep below would drop the blocks anyway,
-      // but the registry should not accumulate dead handles)
-      graft.ext.TextDedup.releaseShingles()
-      spark.sparkContext.getPersistentRDDs.values
-        .foreach(_.unpersist(blocking = true))
-      spark.sharedState.cacheManager.clearCache()
-    }
-
     val names = SparkEntry.queries.toSeq.sortBy(_._1)
 
     for (_ <- 0 until warmupPasses) {
       for ((_, fn) <- names) {
-        drain()
+        drain(spark)
         try { fn(spark, sfDir).count(); () } catch { case _: Throwable => () }
       }
       System.gc()
@@ -76,7 +59,7 @@ object Bench {
       var passTotal = 0.0
       var fails = 0
       for ((name, fn) <- names) {
-        drain()
+        drain(spark)
         if (i % 10 == 0) System.gc() // let ContextCleaner drain broadcasts
         val t0 = System.nanoTime()
         val ok =
@@ -156,6 +139,30 @@ object Bench {
       "/ executor shutdown); all timings were recorded before stop")
     // after stop so no executor log lines land after it
     println(line)
+  }
+
+  /** Touch every table's footer once and spin up codegen/JIT — the
+    * warm-up every timing main runs before its first measurement. */
+  def warmTables(spark: SparkSession, sfDir: String): Unit =
+    Tables.all.foreach { t =>
+      try Tables.load(spark, sfDir, t).limit(1).count()
+      catch { case _: Throwable => () }
+    }
+
+  /** Drop anything a query left pinned in the block manager so the next
+    * measurement starts from a clean executor heap (call it OUTSIDE
+    * timers). blocking=true: async removals queued up behind heavy
+    * shuffles were a prime suspect for the round-3 mid-session slowdowns
+    * — pay the wait here, untimed, instead of inside someone else's
+    * measurement. */
+  def drain(spark: SparkSession): Unit = {
+    // release the dedup shingle loans first (clears TextDedup's
+    // registry; the generic sweep below would drop the blocks anyway,
+    // but the registry should not accumulate dead handles)
+    graft.ext.TextDedup.releaseShingles()
+    spark.sparkContext.getPersistentRDDs.values
+      .foreach(_.unpersist(blocking = true))
+    spark.sharedState.cacheManager.clearCache()
   }
 
   /** Fingerprint of the compiled classes backing this JVM — max mtime +

@@ -16,16 +16,7 @@ object BenchDiag {
     val spark = GraftSession.builder(cpus).getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
 
-    Tables.all.foreach { t =>
-      try Tables.load(spark, sfDir, t).limit(1).count()
-      catch { case _: Throwable => () }
-    }
-
-    def drain(): Unit = {
-      spark.sparkContext.getPersistentRDDs.values
-        .foreach(_.unpersist(blocking = true)) // keep in lockstep with Bench.drain
-      spark.sharedState.cacheManager.clearCache()
-    }
+    Bench.warmTables(spark, sfDir)
 
     val gcBeans = ManagementFactory.getGarbageCollectorMXBeans.asScala
     val jit = ManagementFactory.getCompilationMXBean
@@ -50,7 +41,7 @@ object BenchDiag {
     while (p < passes) {
       var i = 0
       for ((name, fn) <- names) {
-        drain()
+        Bench.drain(spark)
         if (i % 10 == 0) System.gc()
         val (g0, n0, j0) = (gcMs, gcN, jit.getTotalCompilationTime)
         val t0 = System.nanoTime()

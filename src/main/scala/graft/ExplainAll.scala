@@ -16,14 +16,13 @@ object ExplainAll {
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt
     val spark = GraftSession.builder(cpus).getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
-    Tables.all.foreach(t => try Tables.load(spark, sfDir, t).limit(1).count() catch { case _: Throwable => () })
+    Bench.warmTables(spark, sfDir)
     new java.io.File(outDir).mkdirs()
     val names = SparkEntry.queries.toSeq.sortBy(_._1)
       .filter { case (n, _) => only.forall(_.contains(n)) }
     for ((name, fn) <- names) {
       try {
-        spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(blocking = false))
-        spark.sharedState.cacheManager.clearCache()
+        Bench.drain(spark)
         val df = fn(spark, sfDir)
         val plan = df.queryExecution.explainString(
           org.apache.spark.sql.execution.FormattedMode)

@@ -18,7 +18,7 @@ object PhaseProf {
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt
     val spark = GraftSession.builder(cpus).getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
-    Tables.all.foreach(t => try Tables.load(spark, sfDir, t).limit(1).count() catch { case _: Throwable => () })
+    Bench.warmTables(spark, sfDir)
 
     case class J(id: Int, var desc: String, var t0: Long = 0L, var t1: Long = 0L,
                  var taskMs: Long = 0L, var nTasks: Int = 0, var nStages: Int = 0)

@@ -11,7 +11,7 @@ object QTime {
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt
     val spark = GraftSession.builder(cpus).getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
-    Tables.all.foreach(t => try Tables.load(spark, sfDir, t).limit(1).count() catch { case _: Throwable => () })
+    Bench.warmTables(spark, sfDir)
     if (doExplain) SparkEntry.queries(name)(spark, sfDir).explain("formatted")
     // build INSIDE the timer: driver-orchestrated queries (d9 components,
     // j8 cascade) run eager jobs at construction, and the bench charges

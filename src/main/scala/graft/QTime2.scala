@@ -14,7 +14,7 @@ object QTime2 {
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt
     val spark = GraftSession.builder(cpus).getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
-    Tables.all.foreach(t => try Tables.load(spark, sfDir, t).limit(1).count() catch { case _: Throwable => () })
+    Bench.warmTables(spark, sfDir)
     for (i <- 1 to 3) {
       val t0 = System.nanoTime()
       val n = SparkEntry.queries(name)(spark, sfDir).count()

@@ -27,7 +27,7 @@ private[graft] object SparkEntryGraph {
     // customer. The corpus-curation reading: rank = the web-graph quality
     // prior (Common Crawl's page ranking) computed with NO graph runtime
     // — per iteration one edge join + one dst-keyed sum, both map-side
-    // combinable, lineage-cut per round (Components' discipline). Exact
+    // combinable, lineage bounded by plan size (ops.Fixpoint). Exact
     // LONG micro-unit arithmetic end to end (every division `div`), so
     // the oracle's unrolled 5 iterations match hash-for-hash.
     "g1_pagerank" -> ((s, dir) => {
@@ -153,7 +153,7 @@ private[graft] object SparkEntryGraph {
         .groupBy(col("v")).agg(count(lit(1)).as("d"))
         .agg(expr("percentile_disc(0.1) WITHIN GROUP (ORDER BY d)"))
         .collect()(0).getDouble(0).toInt
-      graft.ops.Graph.kcore(e, "a", "b", k = k, rounds = Some(3), cutEvery = 1)
+      graft.ops.Graph.kcore(e, "a", "b", k = k, rounds = Some(3))
         .select(col("node").as("node_id"), col("core_deg"))
     }),
 

@@ -12,9 +12,7 @@ object W23Probe {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.1")
     val spark = GraftSession.builder(32).getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
-    Tables.all.foreach(t =>
-      try Tables.load(spark, sfDir, t).limit(1).count()
-      catch { case _: Throwable => () })
+    Bench.warmTables(spark, sfDir)
     val listener = new org.apache.spark.sql.streaming.StreamingQueryListener {
       import org.apache.spark.sql.streaming.StreamingQueryListener._
       override def onQueryStarted(e: QueryStartedEvent): Unit = ()

@@ -27,21 +27,16 @@ object Cascade {
 
   /** Per-level lineage-cut strategy (ADVICE r3: callers must be able to
     * pick reliability vs speed explicitly).
-    *  - [[Auto]] (default): [[ReliableCheckpoint]] when the SparkContext
-    *    has a checkpoint dir configured (cluster jobs set one — cuts
-    *    survive executor loss and dynamic deallocation), else
-    *    [[LocalCheckpoint]] (single-JVM/dev/bench: no distributed-FS
-    *    round-trip). The cluster-correct behavior is therefore one
-    *    `setCheckpointDir` away, with no code change in callers.
-    *  - [[LocalCheckpoint]]: executor-block checkpoints — right for
-    *    single-box/bench runs and static allocation; data is lost on
-    *    executor failure and unsafe with dynamic allocation.
-    *  - [[ReliableCheckpoint]]: `checkpoint()` to the SparkContext
-    *    checkpoint dir (caller must have called `setCheckpointDir`) —
-    *    survives executor loss; the explicit cluster choice. NOTE: Spark
-    *    does not delete reliable checkpoint files by default, and a
-    *    cascade (or Components fixpoint) issues one per level/round —
-    *    long-running cluster jobs should set
+    *  - [[Auto]] (default): a reliable `checkpoint()` to the SparkContext
+    *    checkpoint dir when one is configured (cluster jobs set one — cuts
+    *    survive executor loss and dynamic deallocation), else an
+    *    executor-block `localCheckpoint()` (single-JVM/dev/bench: no
+    *    distributed-FS round-trip; blocks are lost on executor failure).
+    *    The cluster-correct behavior is therefore one `setCheckpointDir`
+    *    away, with no code change in callers. NOTE: Spark does not delete
+    *    reliable checkpoint files by default, and a cascade (or a
+    *    [[Fixpoint]] loop) issues one per level/round — long-running
+    *    cluster jobs should set
     *    `spark.cleaner.referenceTracking.cleanCheckpoints=true` (the
     *    ContextCleaner then removes a cut's files once its RDD is
     *    GC-unreachable) or clean the per-job checkpoint subdir after the
@@ -51,21 +46,6 @@ object Cascade {
   sealed trait Strategy
   case object Auto extends Strategy
   case object NoCheckpoint extends Strategy
-  case object LocalCheckpoint extends Strategy
-  case object ReliableCheckpoint extends Strategy
-
-  /** True when `s` resolves to LOCAL checkpointing for this session.
-    * Lazy local cuts are free — `localCheckpoint(false)` persists the
-    * blocks during the first action that computes them, so a probe
-    * action (fixpoint checksum) can materialize the cut in the SAME
-    * job. A lazy RELIABLE checkpoint instead re-runs the lineage in a
-    * separate job to write its files — callers keep those eager. */
-  private[graft] def resolvesLocal(df: DataFrame, s: Strategy): Boolean =
-    s match {
-      case LocalCheckpoint => true
-      case Auto => df.sparkSession.sparkContext.getCheckpointDir.isEmpty
-      case _ => false
-    }
 
   /** Apply one lineage cut under `s` (see [[Strategy]]). `private[graft]`
     * so entry-level derivations (e.g. g8's shared co-purchase edge set)
@@ -74,8 +54,6 @@ object Cascade {
     * everywhere, never a hardcoded executor-block localCheckpoint. */
   private[graft] def cut(df: DataFrame, s: Strategy, eager: Boolean): DataFrame = s match {
     case NoCheckpoint => df
-    case LocalCheckpoint => df.localCheckpoint(eager)
-    case ReliableCheckpoint => df.checkpoint(eager)
     case Auto =>
       if (df.sparkSession.sparkContext.getCheckpointDir.isDefined)
         df.checkpoint(eager)
@@ -90,7 +68,7 @@ object Cascade {
     * @param seeds    node name → DataFrame with that node's id column,
     *                 listing initially-deleted ids
     * @param strategy per-level lineage cut (see [[Strategy]]; default
-    *                 [[LocalCheckpoint]]). Deleted-id sets are cut eagerly
+    *                 [[Auto]]). Deleted-id sets are cut eagerly
     *                 (tiny frames, one small job per level); survivor
     *                 frames lazily (materialized once at first use, then
     *                 reused from storage). Note the eager cuts mean

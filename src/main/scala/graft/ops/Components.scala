@@ -20,11 +20,12 @@ import org.apache.spark.sql.functions._
   *
   * Scale notes: labels are O(V) and each round shuffles O(E + V) on the
   * vertex id — same profile as one GraphX Pregel superstep. Lineage is
-  * cut per round ([[Cascade.Strategy]], reused) exactly like Cascade's
-  * levels: without a cut, round k re-executes rounds 1..k-1. Convergence
-  * is detected by the label-sum invariant: labels only ever decrease, so
-  * the sum of labels is strictly decreasing until fixpoint (summed as
-  * decimal(38,0) — no overflow at any V).
+  * cut per round by [[Fixpoint.converge]], the round's convergence
+  * checksum materializing the cut: without a cut, round k re-executes
+  * rounds 1..k-1. Convergence is detected by the label-sum invariant:
+  * labels only ever decrease, so the sum of labels is strictly
+  * decreasing until fixpoint (summed as decimal(38,0) — no overflow at
+  * any V).
   */
 object Components {
 
@@ -69,25 +70,15 @@ object Components {
       requireConvergence: Boolean = true,
       algo: Algo = HashMin): DataFrame = {
 
-    // LAZY cuts when the strategy resolves to local checkpointing
-    // (round-20, guide §7 driver costs): each round's convergence
-    // checksum is an action anyway, and a lazy localCheckpoint persists
-    // its blocks during the first action that computes them — so the
-    // checksum MATERIALIZES the cut in the same job, halving the
-    // per-round driver actions (2 → 1). Reliable checkpoints stay
-    // eager: lazy reliable cuts re-run the lineage in a separate job
-    // to write their files. Labels/convergence are value-identical
-    // under either schedule.
-    def cut(df: DataFrame): DataFrame =
-      Cascade.cut(df, strategy, eager = !Cascade.resolvesLocal(df, strategy))
-
     // cut the edge frame ONCE: every round joins against it, and without
     // a cut each round re-executes the full upstream edge derivation
     // (e.g. the inverted-index Jaccard scan behind near-dup pairs) —
-    // measured 9.7s -> 3.4s on d9 at sf0.1
-    val bi = cut(
+    // measured 9.7s -> 3.4s on d9 at sf0.1. The first round's checksum
+    // materializes it.
+    val bi = Fixpoint.cutForAction(
       edges.select(col(srcCol).as("_src"), col(dstCol).as("_dst"))
-        .unionByName(edges.select(col(dstCol).as("_src"), col(srcCol).as("_dst"))))
+        .unionByName(edges.select(col(dstCol).as("_src"), col(srcCol).as("_dst"))),
+      strategy)
     val endpointIds = bi.select(col("_src").as(idCol))
     val vertexIds = vertices
       .map(_.select(col(idCol)).unionByName(endpointIds))
@@ -95,41 +86,20 @@ object Components {
       .distinct()
 
     if (algo == StarContraction)
-      return starConnected(bi, vertexIds, idCol, maxIter, cut, requireConvergence)
+      return starConnected(bi, vertexIds, idCol, maxIter, strategy, requireConvergence)
 
-    var labels = cut(vertexIds.select(col(idCol), col(idCol).as("component")))
-    var labelSum = checksum(labels)
-    var it = 0
-    var converged = false
-    // maxIter bounds the label-PROPAGATION rounds; convergence is only
-    // OBSERVED by a round whose checksum doesn't move, so allow one extra
-    // confirmation round — otherwise a graph whose diameter equals
-    // maxIter exactly would finalize its labels on the last round and
-    // still be reported unconverged ("maxIter >= diameter" must suffice)
-    while (!converged && it <= maxIter) {
+    // a graph whose diameter exceeds maxIter ends with labels that still
+    // split one component into several ids — corrupt clusters, not a slow
+    // answer — so the loop fails loudly (or warns, for callers that accept
+    // a refinement of the true components)
+    Fixpoint.converge(vertexIds.select(col(idCol), col(idCol).as("component")),
+        strategy, maxIter, "Components.connected", requireConvergence) { labels =>
       val msgs = bi
         .join(labels.withColumnRenamed(idCol, "_src"), Seq("_src"))
         .select(col("_dst").as(idCol), col("component"))
-      val next = cut(
-        labels.unionByName(msgs)
-          .groupBy(col(idCol)).agg(min(col("component")).as("component")))
-      val nextSum = checksum(next)
-      converged = nextSum == labelSum
-      labels = next
-      labelSum = nextSum
-      it += 1
-    }
-    // a graph whose diameter exceeds maxIter exits the loop with labels
-    // that still split one component into several ids — corrupt clusters,
-    // not a slow answer. Fail loudly (or warn, for callers that accept a
-    // refinement of the true components) instead of returning them as fact.
-    if (!converged) {
-      val msg = s"Components.connected did not converge within maxIter=$maxIter " +
-        s"rounds (graph diameter exceeds the bound); labels are NOT final components"
-      if (requireConvergence) throw new IllegalStateException(msg)
-      else System.err.println(s"WARN $msg")
-    }
-    labels
+      labels.unionByName(msgs)
+        .groupBy(col(idCol)).agg(min(col("component")).as("component"))
+    }(checksum)
   }
 
   /** Representative selection — the "which copy do we keep" act on top of
@@ -192,17 +162,15 @@ object Components {
     * vertices label themselves. */
   private def starConnected(
       bi: DataFrame, vertexIds: DataFrame, idCol: String, maxIter: Int,
-      cut: DataFrame => DataFrame, requireConvergence: Boolean): DataFrame = {
+      strategy: Cascade.Strategy, requireConvergence: Boolean): DataFrame = {
     import org.apache.spark.sql.expressions.Window
     val wU = Window.partitionBy(col("_u"))
-    var e = cut(bi.filter(col("_src") =!= col("_dst"))
+    val canonical = bi.filter(col("_src") =!= col("_dst"))
       .select(greatest(col("_src"), col("_dst")).as("_u"),
         least(col("_src"), col("_dst")).as("_v"))
-      .distinct())
-    var sig = edgeSig(e)
-    var it = 0
-    var converged = false
-    while (!converged && it <= maxIter) {
+      .distinct()
+    val e = Fixpoint.converge(canonical, strategy, maxIter,
+        "Components.connected(StarContraction)", requireConvergence) { e =>
       val nbrs = e.unionByName(
         e.select(col("_v").as("_u"), col("_u").as("_v")))
       val large = nbrs
@@ -212,24 +180,12 @@ object Components {
         .filter(col("_u") =!= col("_v"))
         .distinct()
       val withM = large.withColumn("_m", min(col("_v")).over(wU))
-      val small = withM
+      withM
         .select(col("_v").as("_u"), col("_m").as("_v"))
         .unionByName(withM.select(col("_u"), col("_m").as("_v")))
         .filter(col("_u") =!= col("_v"))
         .distinct()
-      val next = cut(small)
-      val nextSig = edgeSig(next)
-      converged = nextSig == sig
-      e = next
-      sig = nextSig
-      it += 1
-    }
-    if (!converged) {
-      val msg = s"Components.connected(StarContraction) did not converge " +
-        s"within maxIter=$maxIter rounds; labels are NOT final components"
-      if (requireConvergence) throw new IllegalStateException(msg)
-      else System.err.println(s"WARN $msg")
-    }
+    }(edgeSig)
     vertexIds
       .join(e.groupBy(col("_u").as(idCol)).agg(min(col("_v")).as("_c")),
         Seq(idCol), "left")

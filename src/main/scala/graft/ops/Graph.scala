@@ -11,8 +11,8 @@ import org.apache.spark.sql.functions._
   * vertex-program API. One iteration = ranks ⋈ edges (contribution =
   * rank/out-degree per edge) + one dst-keyed sum — two shuffles on the
   * edge key, both map-side combinable, the same per-round shape as
-  * [[Components.connected]]'s hash-min propagation, with the same
-  * [[Cascade.Strategy]] lineage cuts per round.
+  * [[Components.connected]]'s hash-min propagation. Every loop here
+  * bounds its lineage by [[Fixpoint]]'s plan-size rule.
   *
   * Determinism across engines and partitionings: ranks live in LONG
   * micro-units of a fixed total mass and EVERY division is integer
@@ -43,52 +43,96 @@ object Graph {
                iters: Int = 5, dampingMil: Int = 850,
                total: Long = 1000000000000L,
                checkpoint: Cascade.Strategy = Cascade.Auto,
-               cutEvery: Int = 8,
-               redistributeDangling: Boolean = false): DataFrame = {
+               redistributeDangling: Boolean = false): DataFrame =
+    rankLoop(edges, src, dst, None, iters, dampingMil, total, checkpoint,
+      redistributeDangling)
+
+  /** Personalized PageRank (Haveliwala 2002 — "rank relative to a
+    * trusted seed set"): the teleport mass lands ONLY on `seeds`, so the
+    * stationary ranks measure proximity to the seeds through the link
+    * structure — the data-selection prior "keep documents close to a
+    * curated set". Same exact integer arithmetic, per-iteration shape,
+    * and lineage discipline as [[pageRank]] (which is this with every
+    * node a seed); the seed flag rides a broadcast join (seed sets are
+    * small by use-case). `seeds` is any frame whose FIRST column holds
+    * node ids; ids absent from the graph are ignored (semi-join). */
+  def personalizedPageRank(edges: DataFrame, src: String, dst: String,
+                           seeds: DataFrame, iters: Int = 5,
+                           dampingMil: Int = 850,
+                           total: Long = 1000000000000L,
+                           checkpoint: Cascade.Strategy = Cascade.Auto,
+                           redistributeDangling: Boolean = false): DataFrame =
+    rankLoop(edges, src, dst, Some(seeds), iters, dampingMil, total, checkpoint,
+      redistributeDangling)
+
+  /** The rank loop of [[pageRank]] (`seeds` = None: every node a seed)
+    * and [[personalizedPageRank]]. */
+  private def rankLoop(edges: DataFrame, src: String, dst: String,
+                       seeds: Option[DataFrame], iters: Int, dampingMil: Int,
+                       total: Long, checkpoint: Cascade.Strategy,
+                       redistributeDangling: Boolean): DataFrame = {
     require(iters >= 0 && dampingMil >= 0 && dampingMil <= 1000)
+    def cut(df: DataFrame): DataFrame = Cascade.cut(df, checkpoint, eager = false)
     // the loop-invariant frames are cut ONCE: without the cuts every
     // iteration's plan re-derives the edge DISTINCT and the degree
     // aggregate from the source scans. Degrees ride ALONG the edge rows
-    // (one join now, zero per iteration). Together with cutEvery this
-    // took the g1 entity graph from 14.5s to 2.6s at sf0.1.
-    val e = Cascade.cut(
-      edges.select(col(src).as("__s"), col(dst).as("__d")).distinct(),
-      checkpoint, eager = false)
-    val eDeg = Cascade.cut(
-      e.join(e.groupBy(col("__s")).agg(count(lit(1)).as("__deg")), Seq("__s")),
-      checkpoint, eager = false)
-    val nodes = Cascade.cut(
+    // (one join now, zero per iteration). This took the g1 entity graph
+    // from 14.5s to 2.6s at sf0.1.
+    val e = cut(edges.select(col(src).as("__s"), col(dst).as("__d")).distinct())
+    val eDeg = cut(
+      e.join(e.groupBy(col("__s")).agg(count(lit(1)).as("__deg")), Seq("__s")))
+    val nodes = cut(
       e.select(col("__s").as("node"))
-        .union(e.select(col("__d").as("node"))).distinct(),
-      checkpoint, eager = false)
-    // one bounded driver action; per-node share and damped teleport base
-    // become plain literals in every downstream plan
-    val n = nodes.count()
-    require(n > 0, "empty edge set")
-    val perNode = total / n
-    val baseTerm = ((1000L - dampingMil) * perNode) / 1000L
+        .union(e.select(col("__d").as("node"))).distinct())
+    // one bounded driver action; the per-seed share and the damped
+    // teleport base become plain literals in every downstream plan. With
+    // every node a seed the flag is the literal `true`, which the
+    // optimizer folds out of every CASE below.
+    val (nodesFlag, isSeed, nSeeds) = seeds match {
+      case None =>
+        val n = nodes.count()
+        require(n > 0, "empty edge set")
+        (nodes, "true", n)
+      case Some(sd) =>
+        val seedSet = cut(
+          sd.select(col(sd.columns.head).as("node")).distinct()
+            .join(nodes, Seq("node"), "left_semi"))
+        val n = seedSet.count()
+        require(n > 0, "no seed is a graph node")
+        // the seed flag rides the cut nodes frame, so each iteration's
+        // base term needs NO extra join (measured: a per-iteration
+        // broadcast probe was the only g2-over-g1 overhead at 10x data)
+        (cut(nodes.join(broadcast(seedSet.withColumn("__sflag", lit(1))),
+            Seq("node"), "left")
+          .select(col("node"), col("__sflag").isNotNull.as("__seed"))),
+          "__seed", n)
+    }
+    val perSeed = total / nSeeds
+    val base = s"CASE WHEN $isSeed THEN ${((1000L - dampingMil) * perSeed) / 1000L}L ELSE 0L END"
     // dangling = no outgoing edge (a dst-only node): its rank feeds no
     // contribution row, so without redistribution its mass simply
     // leaks. Redistribution gives every dangling node ONE synthetic
     // NULL-keyed "edge" (deg 1) in the joined edge frame: its whole
     // rank then flows through the SAME contrib/inbound aggregate as
     // real mass, landing in the null group — the round's dangling sum
-    // — which a 1-row filter+agg lifts out as a broadcast literal gate.
-    // No second evaluation of the rank chain, no rank×dangling join
-    // (both earlier shapes measured 13-15 s at sf1 vs g1's 5.4 s; the
-    // null key can never meet a real node in the left join below).
+    // — which a 1-row filter+agg lifts out as a broadcast literal gate
+    // and the seed CASE hands to the seeds (the personalization-vector
+    // convention). No second evaluation of the rank chain, no
+    // rank×dangling join (both earlier shapes measured 13-15 s at sf1
+    // vs g1's 5.4 s; the null key can never meet a real node in the
+    // left join below).
     val eDegR =
       if (!redistributeDangling) eDeg
-      else Cascade.cut(
+      else cut(
         eDeg.unionByName(
           nodes.join(e.select(col("__s").as("node")).distinct(), Seq("node"), "left_anti")
             .select(col("node").as("__s"),
               lit(null).cast(nodes.schema("node").dataType).as("__d"),
-              lit(1L).as("__deg"))),
-        checkpoint, eager = false)
-    var ranks = nodes.select(col("node"), lit(perNode).as("rank_micro"))
-    var i = 0
-    while (i < iters) {
+              lit(1L).as("__deg"))))
+    var ranks = nodesFlag.select(col("node"),
+      expr(s"CASE WHEN $isSeed THEN ${perSeed}L ELSE 0L END").as("rank_micro"))
+    for (_ <- 1 to iters) {
+      ranks = Fixpoint.bounded(ranks, checkpoint)
       val contrib = ranks
         .join(eDegR, ranks("node") === eDegR("__s"))
         .select(col("__d").as("node"),
@@ -103,136 +147,23 @@ object Graph {
       val inbound = contrib.groupBy(col("node")).agg(sum(col("__c")).as("__in"))
       val next =
         if (!redistributeDangling)
-          nodes.join(inbound, Seq("node"), "left")
+          nodesFlag.join(inbound, Seq("node"), "left")
             .select(col("node"),
-              (lit(baseTerm) +
-                expr(s"(($dampingMil * coalesce(__in, 0L)) div 1000)"))
+              expr(s"$base + (($dampingMil * coalesce(__in, 0L)) div 1000)")
                 .as("rank_micro"))
         else {
           // the null group IS the dangling sum; the agg guards the
           // no-dangling case (empty filter -> one 0 row, never an
-          // empty cross join). Each node receives the damped integer
-          // share dsum div n.
-          val dsum = inbound.filter(col("node").isNull)
-            .agg(coalesce(sum(col("__in")), lit(0L)).as("__dsum"))
-          nodes.join(inbound, Seq("node"), "left").crossJoin(dsum)
-            .select(col("node"),
-              (lit(baseTerm) +
-                expr(s"(($dampingMil * (coalesce(__in, 0L) + (__dsum div $n))) div 1000)"))
-                .as("rank_micro"))
-        }
-      // unlike Components' fixpoint there is no per-round ACTION here, so
-      // leak-mode lineage only grows linearly with iters; cut every
-      // `cutEvery` rounds (long runs), not every round (a per-round
-      // checkpoint write costs more than the round itself at typical
-      // graph sizes). REDISTRIBUTE mode consumes `inbound` twice per
-      // round (the per-node join and the 1-row dangling lift), so its
-      // plan grows ~2^rounds between cuts — tolerable at the judged 5
-      // rounds (993-operator plan), ruinous at convergence lengths
-      // (2^16). Long redistribute runs (iters > cutEvery) therefore cut
-      // EVERY round (hits' round-19 rule; per-round cuts at short
-      // lengths measured 2.5x slower, so short runs stay uncut).
-      val cadence =
-        if (redistributeDangling && iters > cutEvery) 1 else cutEvery
-      ranks = if ((i + 1) % cadence == 0 && i + 1 < iters)
-        Cascade.cut(next, checkpoint, eager = false) else next
-      i += 1
-    }
-    ranks
-  }
-
-  /** Personalized PageRank (Haveliwala 2002 — "rank relative to a
-    * trusted seed set"): the teleport mass lands ONLY on `seeds`, so the
-    * stationary ranks measure proximity to the seeds through the link
-    * structure — the data-selection prior "keep documents close to a
-    * curated set". Same exact integer arithmetic, per-iteration shape,
-    * and lineage discipline as [[pageRank]]; the seed flag rides a
-    * broadcast join (seed sets are small by use-case). `seeds` is any
-    * frame whose FIRST column holds node ids; ids absent from the graph
-    * are ignored (semi-join). */
-  def personalizedPageRank(edges: DataFrame, src: String, dst: String,
-                           seeds: DataFrame, iters: Int = 5,
-                           dampingMil: Int = 850,
-                           total: Long = 1000000000000L,
-                           checkpoint: Cascade.Strategy = Cascade.Auto,
-                           cutEvery: Int = 8,
-                           redistributeDangling: Boolean = false): DataFrame = {
-    require(iters >= 0 && dampingMil >= 0 && dampingMil <= 1000)
-    val e = Cascade.cut(
-      edges.select(col(src).as("__s"), col(dst).as("__d")).distinct(),
-      checkpoint, eager = false)
-    val eDeg = Cascade.cut(
-      e.join(e.groupBy(col("__s")).agg(count(lit(1)).as("__deg")), Seq("__s")),
-      checkpoint, eager = false)
-    val nodes = Cascade.cut(
-      e.select(col("__s").as("node"))
-        .union(e.select(col("__d").as("node"))).distinct(),
-      checkpoint, eager = false)
-    val seedSet = Cascade.cut(
-      seeds.select(col(seeds.columns.head).as("node")).distinct()
-        .join(nodes, Seq("node"), "left_semi"),
-      checkpoint, eager = false)
-    val nSeeds = seedSet.count()
-    require(nSeeds > 0, "no seed is a graph node")
-    val perSeed = total / nSeeds
-    val baseSeed = ((1000L - dampingMil) * perSeed) / 1000L
-    // the seed flag rides the cut nodes frame, so each iteration's base
-    // term needs NO extra join — same one-join-per-round shape as
-    // pageRank (measured: the per-iteration broadcast probe was the
-    // only g2-over-g1 overhead at 10x data)
-    val nodesFlag = Cascade.cut(
-      nodes.join(broadcast(seedSet.withColumn("__sflag", lit(1))),
-          Seq("node"), "left")
-        .select(col("node"), col("__sflag").isNotNull.as("__seed")),
-      checkpoint, eager = false)
-    // dangling mass teleports to the SEEDS (the personalization-vector
-    // convention), keeping "proximity to the seed set" the measured
-    // quantity instead of leaking toward uniform. Same NULL-keyed
-    // synthetic-edge shape as pageRank: the dangling sum rides the
-    // inbound aggregate's null group, the seed CASE hands it out.
-    val eDegR =
-      if (!redistributeDangling) eDeg
-      else Cascade.cut(
-        eDeg.unionByName(
-          nodes.join(e.select(col("__s").as("node")).distinct(), Seq("node"), "left_anti")
-            .select(col("node").as("__s"),
-              lit(null).cast(nodes.schema("node").dataType).as("__d"),
-              lit(1L).as("__deg"))),
-        checkpoint, eager = false)
-    var ranks = nodesFlag.select(col("node"),
-      when(col("__seed"), lit(perSeed)).otherwise(lit(0L)).as("rank_micro"))
-    var i = 0
-    while (i < iters) {
-      val contrib = ranks
-        .join(eDegR, ranks("node") === eDegR("__s"))
-        .select(col("__d").as("node"),
-          expr("rank_micro div __deg").as("__c"))
-      val inbound = contrib.groupBy(col("node")).agg(sum(col("__c")).as("__in"))
-      val next =
-        if (!redistributeDangling)
-          nodesFlag.join(inbound, Seq("node"), "left")
-            .select(col("node"),
-              (when(col("__seed"), lit(baseSeed)).otherwise(lit(0L)) +
-                expr(s"(($dampingMil * coalesce(__in, 0L)) div 1000)"))
-                .as("rank_micro"))
-        else {
+          // empty cross join)
           val dsum = inbound.filter(col("node").isNull)
             .agg(coalesce(sum(col("__in")), lit(0L)).as("__dsum"))
           nodesFlag.join(inbound, Seq("node"), "left").crossJoin(dsum)
             .select(col("node"),
-              (when(col("__seed"), lit(baseSeed)).otherwise(lit(0L)) +
-                expr(s"(($dampingMil * (coalesce(__in, 0L) + " +
-                  s"(CASE WHEN __seed THEN (__dsum div $nSeeds) ELSE 0L END))) div 1000)"))
+              expr(s"$base + (($dampingMil * (coalesce(__in, 0L) + " +
+                s"(CASE WHEN $isSeed THEN (__dsum div $nSeeds) ELSE 0L END))) div 1000)")
                 .as("rank_micro"))
         }
-      // same adaptive rule as pageRank: redistribute mode's double
-      // consumption of `inbound` grows plans ~2^rounds between cuts, so
-      // long runs cut every round; judged short runs stay unchanged
-      val cadence =
-        if (redistributeDangling && iters > cutEvery) 1 else cutEvery
-      ranks = if ((i + 1) % cadence == 0 && i + 1 < iters)
-        Cascade.cut(next, checkpoint, eager = false) else next
-      i += 1
+      ranks = next
     }
     ranks
   }
@@ -257,24 +188,11 @@ object Graph {
     * default scale before long overflow, far past any real corpus's
     * per-node degree (cap feeds, not corpora, decide this).
     *
-    * Returns (node, auth_micro, hub_micro) for every node.
-    *
-    * `cutEvery` is the lineage-cut cadence for SHORT runs only (iters ≤
-    * cutEvery, where it means "no cuts at all" — the judged g5 length
-    * stays pure lineage). For LONG runs (iters > cutEvery) the cadence
-    * is FORCED to 1 regardless of the passed value: each raw-sum frame
-    * is consumed twice per vector, so the plan grows ~4^cadence between
-    * cuts and even one 4^4-wide uncut plan costs more driver analysis
-    * than every extra barrier together (measured at iters=16: cadence
-    * 4 = 103–108 s, cadence 2 = 12.8–22.7 s, cadence 1 = 7.3–15.9 s —
-    * values identical under any cadence; cuts change plan shape only).
-    * Callers therefore cannot select an intermediate cadence; the
-    * parameter only decides where "short" ends. */
+    * Returns (node, auth_micro, hub_micro) for every node. */
   def hits(edges: DataFrame, src: String, dst: String, iters: Int = 3,
            scale: Long = 1000000L,
-           checkpoint: Cascade.Strategy = Cascade.Auto,
-           cutEvery: Int = 4): DataFrame = {
-    require(iters >= 1 && scale > 0 && cutEvery >= 1)
+           checkpoint: Cascade.Strategy = Cascade.Auto): DataFrame = {
+    require(iters >= 1 && scale > 0)
     val e = Cascade.cut(
       edges.select(col(src).as("__s"), col(dst).as("__d")).distinct(),
       checkpoint, eager = false)
@@ -284,8 +202,10 @@ object Graph {
       checkpoint, eager = false)
     var hub = nodes.select(col("node"), lit(scale).as("hub_micro"))
     var auth = nodes.select(col("node"), lit(0L).as("auth_micro"))
-    var i = 0
-    while (i < iters) {
+    // each raw-sum frame is consumed TWICE (the rescale join and its own
+    // 1-row max), so each vector's plan doubles per vector update — ~4^round
+    for (_ <- 1 to iters) {
+      hub = Fixpoint.bounded(hub, checkpoint)
       val aRaw = hub.join(e, hub("node") === e("__s"))
         .groupBy(col("__d")).agg(sum(col("hub_micro")).as("__raw"))
         .select(col("__d").as("node"), col("__raw"))
@@ -300,26 +220,6 @@ object Graph {
       hub = nodes.join(hRaw, Seq("node"), "left").crossJoin(hMax)
         .select(col("node"),
           expr(s"(coalesce(__raw, 0L) * $scale) div __m").as("hub_micro"))
-      // Each raw-sum frame is consumed TWICE per vector (the rescale
-      // join and its own 1-row max), so the plan grows ~4^round —
-      // uncut, an iters=16 run spent 30+ min in canonicalization
-      // alone (pageRank's rank chain is only reused ~2× per round,
-      // which is why it tolerates cutEvery=8). Short runs (iters <=
-      // cutEvery, the judged g5 length) stay pure lineage — per-round
-      // cuts there cost 2 materialization barriers a round, measured
-      // 2.8 s → 7.2 s on g5. LONG runs cut EVERY round instead of
-      // every cutEvery rounds (round-19 optimization): even ONE
-      // 4^cutEvery-wide uncut plan costs more driver
-      // analysis/canonicalization time than all the extra barriers
-      // together — measured at iters=16 on the GraphSpec graph:
-      // cadence 4 = 103–108 s, cadence 2 = 12.8–22.7 s, cadence 1 =
-      // 7.3–15.9 s (values identical; cuts change plan shape only).
-      val cadence = if (iters > cutEvery) 1 else cutEvery
-      if ((i + 1) % cadence == 0 && i + 1 < iters) {
-        auth = Cascade.cut(auth, checkpoint, eager = false)
-        hub = Cascade.cut(hub, checkpoint, eager = false)
-      }
-      i += 1
     }
     auth.join(hub, Seq("node"))
   }
@@ -341,12 +241,11 @@ object Graph {
     *
     * Per round: ONE edge⋈labels join + a (node, label) count + a
     * 1-struct argmax per node — all map-side combinable; the label
-    * chain is reused once per round (linear growth), cut every
-    * `cutEvery` rounds. Returns (node, community). */
+    * chain is reused once per round (linear growth). Returns (node,
+    * community). */
   def labelPropagation(edges: DataFrame, src: String, dst: String,
                        iters: Int = 3,
-                       checkpoint: Cascade.Strategy = Cascade.Auto,
-                       cutEvery: Int = 4): DataFrame = {
+                       checkpoint: Cascade.Strategy = Cascade.Auto): DataFrame = {
     require(iters >= 1)
     val e0 = edges.select(col(src).as("__a"), col(dst).as("__b"))
       .filter(col("__a") =!= col("__b"))
@@ -358,8 +257,8 @@ object Graph {
       checkpoint, eager = false)
     var labels = und.select(col("__a").as("node")).distinct()
       .select(col("node"), col("node").as("label"))
-    var i = 0
-    while (i < iters) {
+    for (_ <- 1 to iters) {
+      labels = Fixpoint.bounded(labels, checkpoint)
       val votes = und.join(labels, und("__b") === labels("node"))
         .select(und("__a").as("node"), col("label"))
         .groupBy(col("node"), col("label"))
@@ -369,9 +268,6 @@ object Graph {
       labels = votes.groupBy(col("node"))
         .agg(max(struct(col("__c"), (-col("label")).as("__nl"))).as("__m"))
         .select(col("node"), (-col("__m.__nl")).as("label"))
-      if ((i + 1) % cutEvery == 0 && i + 1 < iters)
-        labels = Cascade.cut(labels, checkpoint, eager = false)
-      i += 1
     }
     labels.select(col("node"), col("label").as("community"))
   }
@@ -460,7 +356,7 @@ object Graph {
     * the deterministic judged form, matching an r-CTE oracle unroll;
     * `rounds = None` runs to the fixpoint (the k-core itself), the
     * driver loop stopping when the survivor count is stable (one
-    * O(1)-row action per round, Components' discipline). Returns each
+    * O(1)-row action per round, [[Fixpoint.converge]]). Returns each
     * surviving node with its degree within the LAST pre-filter
     * survivor set — at the fixpoint that IS its core degree.
     *
@@ -471,8 +367,7 @@ object Graph {
     * Σ removed-adjacent) typical, the same class as g1's iteration. */
   def kcore(edges: DataFrame, src: String, dst: String, k: Int,
             rounds: Option[Int] = None,
-            checkpoint: Cascade.Strategy = Cascade.Auto,
-            cutEvery: Int = 4): DataFrame = {
+            checkpoint: Cascade.Strategy = Cascade.Auto): DataFrame = {
     require(k >= 1 && rounds.forall(_ >= 1))
     val e0 = edges.select(col(src).as("__a"), col(dst).as("__b"))
       .filter(col("__a") =!= col("__b"))
@@ -481,40 +376,25 @@ object Graph {
       e0.select(least(col("__a"), col("__b")).as("__a"),
           greatest(col("__a"), col("__b")).as("__b")).distinct(),
       checkpoint, eager = false)
-    def survDegrees(s: DataFrame): DataFrame = {
+    // one synchronous peel of the survivor set `s` (a frame with `node`)
+    def peel(s: DataFrame): DataFrame = {
       val live = e
         .join(s.select(col("node").as("__a")), Seq("__a"), "left_semi")
         .join(s.select(col("node").as("__b")), Seq("__b"), "left_semi")
       live.select(col("__a").as("node"))
         .union(live.select(col("__b").as("node")))
         .groupBy(col("node")).agg(count(lit(1)).as("core_deg"))
+        .filter(col("core_deg") >= k)
     }
-    var surv = e.select(col("__a").as("node"))
+    val all = e.select(col("__a").as("node"))
       .union(e.select(col("__b").as("node"))).distinct()
-    var out: DataFrame = null
     rounds match {
       case Some(r) =>
-        var i = 0
-        while (i < r) {
-          out = survDegrees(surv).filter(col("core_deg") >= k)
-          surv = out.select("node")
-          if ((i + 1) % cutEvery == 0 && i + 1 < r)
-            surv = Cascade.cut(surv, checkpoint, eager = false)
-          i += 1
-        }
+        (1 to r).foldLeft(all)((s, _) => peel(Fixpoint.bounded(s, checkpoint)))
       case None =>
-        var n = -1L
-        var n2 = surv.count()
-        while (n2 != n) {
-          n = n2
-          out = Cascade.cut(
-            survDegrees(surv).filter(col("core_deg") >= k),
-            checkpoint, eager = true)
-          surv = out.select("node")
-          n2 = surv.count()
-        }
+        // the survivor count only falls, so the loop ends without a bound
+        Fixpoint.converge(all, checkpoint, Int.MaxValue, "Graph.kcore")(peel)(_.count())
     }
-    out
   }
 
   /** Single-source SHORTEST PATHS by hop count — frontier BFS: round i
@@ -529,8 +409,7 @@ object Graph {
     * whose round count is the graph's diameter, data-dependent). */
   def shortestPaths(edges: DataFrame, src: String, dst: String,
                     sourceId: Long, maxDepth: Int,
-                    checkpoint: Cascade.Strategy = Cascade.Auto,
-                    cutEvery: Int = 4): DataFrame = {
+                    checkpoint: Cascade.Strategy = Cascade.Auto): DataFrame = {
     require(maxDepth >= 1)
     val spark = edges.sparkSession
     import spark.implicits._
@@ -539,16 +418,13 @@ object Graph {
         .filter(col("__s") =!= col("__d")).distinct(),
       checkpoint, eager = false)
     var dist = Seq((sourceId, 0L)).toDF("node", "dist")
-    var i = 1
-    while (i <= maxDepth) {
+    for (i <- 1 to maxDepth) {
+      dist = Fixpoint.bounded(dist, checkpoint)
       val frontier = dist.filter(col("dist") === (i - 1))
       val relaxed = frontier.join(e, frontier("node") === e("__s"))
         .select(col("__d").as("node"), lit(i.toLong).as("dist"))
       dist = dist.unionByName(relaxed)
         .groupBy(col("node")).agg(min(col("dist")).as("dist"))
-      if (i % cutEvery == 0 && i < maxDepth)
-        dist = Cascade.cut(dist, checkpoint, eager = false)
-      i += 1
     }
     dist
   }

@@ -1,7 +1,6 @@
 package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.StreamingQuery
 
 /** w22 — INCREMENTAL duplicate clustering: d9's streaming twin.
@@ -27,41 +26,17 @@ import org.apache.spark.sql.streaming.StreamingQuery
   * than per arrival. The w18 multi-parent note is the same trade. */
 object ComponentsStream {
 
-  /** Append one pair delta's distinct edges to the log. Pure function of
-    * the delta — the spec replays batches in arbitrary orders through
-    * it. */
-  def absorb(edges: DataFrame, srcCol: String, dstCol: String,
-             logDir: String): Unit = {
-    edges.select(col(srcCol).as("src"), col(dstCol).as("dst")).distinct()
-      .write.mode("append").parquet(s"$logDir/edges")
-  }
-
-  /** foreachBatch driver: every arriving micro-batch of (src, dst) pairs
-    * is absorbed into the log. */
+  /** The log substrate is w33's ([[PageRankStream]]), verbatim: every
+    * arriving micro-batch of (src, dst) pairs is absorbed into the log. */
   def start(stream: DataFrame, srcCol: String, dstCol: String,
             logDir: String, checkpointDir: String): StreamingQuery =
-    stream.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        absorb(batch, srcCol, dstCol, logDir)
-      }
-      .start()
-
-  /** The logged edge set (distinct union of every delta); absent log →
-    * empty frame (no delta ever arrived). */
-  def loggedEdges(spark: SparkSession, logDir: String): DataFrame = {
-    import spark.implicits._
-    try spark.read.parquet(s"$logDir/edges").distinct()
-    catch { case _: org.apache.spark.sql.AnalysisException =>
-      Seq.empty[(Long, Long)].toDF("src", "dst")
-    }
-  }
+    PageRankStream.start(stream, srcCol, dstCol, logDir, checkpointDir)
 
   /** Terminal fold: the batch closure over the logged edges — labels
     * must equal [[graft.ops.Components.connected]] on the union of all
     * deliveries (the w22 gate's equality). */
   def fold(spark: SparkSession, logDir: String, vertices: DataFrame,
            idCol: String): DataFrame =
-    graft.ops.Components.connected(loggedEdges(spark, logDir), "src", "dst",
+    graft.ops.Components.connected(PageRankStream.loggedEdges(spark, logDir), "src", "dst",
       vertices = Some(vertices), idCol = idCol)
 }

@@ -1,14 +1,15 @@
 package graft
 
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
-import graft.ops.{Cascade, Graph}
+import graft.ops.{Cascade, Fixpoint, Graph}
 
 /** PageRank semantics: exact integer arithmetic pinned by hand-computed
   * closed forms, determinism across partitionings, multigraph collapse. */
 class GraphSpec extends SparkSpec {
   import spark.implicits._
 
-  private def ranks(df: org.apache.spark.sql.DataFrame): Map[Long, Long] =
+  private def ranks(df: DataFrame): Map[Long, Long] =
     df.collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
 
   test("2-cycle is a fixed point: both nodes keep exactly half the mass") {
@@ -197,14 +198,13 @@ class GraphSpec extends SparkSpec {
   }
 
   test("hits: a convergence-length run (iters=16) converges and keeps analysis time bounded") {
-    // the round-16 lineage fix: pre-fix, each round embedded the prior
-    // round's whole plan TWICE per vector (rescale join + its 1-row
-    // max), so plans grew ~4^round and an iters=16 run spent 30+ min in
-    // canonicalization alone. Per-round LAZY cuts of the raw-sum frames
-    // make the per-round plan constant-size; the gate is (a) this run
-    // completes promptly, (b) a 16-round result equals a 15-round one
-    // (the max-normalized integer fixpoint is stationary at convergence
-    // length), which a broken cut (wrong frame reuse) would break.
+    // each round embeds the prior round's whole plan TWICE per vector
+    // (rescale join + its 1-row max), so uncut plans grow ~4^round and an
+    // iters=16 run spent 30+ min in canonicalization alone. The gate is
+    // (a) this run completes promptly under the plan-size cuts, (b) a
+    // 16-round result equals a 15-round one (the max-normalized integer
+    // fixpoint is stationary at convergence length), which a broken cut
+    // (wrong frame reuse) would break.
     val e = (0L until 300L).map(i => (i % 41, (i * 11) % 41)).toDF("src", "dst")
     def hs(iters: Int) =
       Graph.hits(e, "src", "dst", iters = iters)
@@ -218,23 +218,46 @@ class GraphSpec extends SparkSpec {
     assert(hs(15) == r16, "scores must be stationary at convergence length")
   }
 
-  test("redistribute pageRank: a long run (iters=10) cuts per round — values identical to a driver-side integer reference, time bounded") {
-    // redistribute mode consumes `inbound` twice per round, so plans
-    // grow ~2^rounds between cuts (993 operators at the judged 5
-    // rounds). Long runs (iters > cutEvery) now cut every round (hits'
-    // rule); the gate is (a) values identical to the same integer
-    // arithmetic replayed on the driver (cuts change plan shape only),
-    // (b) bounded wall time. The reference is plain Scala: a 10-round
-    // pure-lineage Spark run costs minutes of plan analysis alone.
+  test("lineage bound: default-argument loops return plans under the budget, time bounded") {
+    // with default arguments the plan-size rule must hold for every loop
+    // shape: hits' ~4^round growth (6,117 plan nodes at iters=4 before
+    // the rule), kcore's bounded peels (3,235 at rounds=4) and
+    // redistribute pageRank's ~2^round growth (iters=10). The returned
+    // frame is never cut itself, so these round counts are ones where
+    // the last cut state leaves it under the budget.
+    val e = (0L until 300L).map(i => (i % 41, (i * 11) % 41)).toDF("src", "dst")
+    for ((name, run) <- Seq[(String, () => DataFrame)](
+        "hits(iters=4)" -> (() => Graph.hits(e, "src", "dst", iters = 4)),
+        "kcore(rounds=Some(4))" -> (() => Graph.kcore(e, "src", "dst", 2, Some(4))),
+        "redistribute pageRank(iters=10)" -> (() => Graph.pageRank(e, "src", "dst",
+          iters = 10, redistributeDangling = true)))) {
+      val t0 = System.nanoTime()
+      val df = run()
+      val nodes = Fixpoint.planSize(df)
+      assert(df.collect().nonEmpty, name)
+      val sec = (System.nanoTime() - t0) / 1e9
+      assert(nodes <= Fixpoint.PlanBudget,
+        s"$name returned a $nodes-node plan, budget ${Fixpoint.PlanBudget}")
+      assert(sec < 30.0, s"$name took ${sec}s — lineage bound broken?")
+    }
+  }
+
+  test("redistribute pageRank: iters=10 equals a driver-side reference") {
+    // redistribute mode consumes `inbound` twice per round, so its plan
+    // grows ~2^rounds until the plan-size rule cuts it; the gate is
+    // (a) values identical to the same integer arithmetic replayed on
+    // the driver (cuts change plan shape only), (b) bounded wall time.
+    // The reference is plain Scala: a 10-round pure-lineage Spark run
+    // costs minutes of plan analysis alone.
     val edges = (0L until 300L).map(i => (i % 41, (i * 11) % 41))
     val e = edges.toDF("src", "dst")
     val cutRun = {
       val t0 = System.nanoTime()
-      val r = Graph.pageRank(e, "src", "dst", iters = 10, cutEvery = 8,
-          checkpoint = Cascade.Auto, redistributeDangling = true) // iters > cutEvery → cadence 1
+      val r = Graph.pageRank(e, "src", "dst", iters = 10,
+          checkpoint = Cascade.Auto, redistributeDangling = true)
         .collect().map(r => (r.getLong(0), r.getLong(1))).sortBy(_._1).toSeq
       val sec = (System.nanoTime() - t0) / 1e9
-      assert(sec < 120.0, s"10 redistribute rounds took ${sec}s — cadence rule broken?")
+      assert(sec < 120.0, s"10 redistribute rounds took ${sec}s — lineage bound broken?")
       r
     }
     // Graph.pageRank's arithmetic: rank div deg along each distinct

@@ -350,7 +350,7 @@ class StreamingSpec extends SparkSpec {
   }
 
   test("w22 component edge logs: order-independent, replay-absorbing, fold == batch closure") {
-    import graft.streaming.ComponentsStream
+    import graft.streaming.{ComponentsStream, PageRankStream}
     import spark.implicits._
     val verts = Seq(1L, 2L, 3L, 10L, 11L, 99L).toDF("id")
     // three pair deltas; a cross-component edge arrives LAST so the fold
@@ -360,7 +360,7 @@ class StreamingSpec extends SparkSpec {
       .map(_.toDF("a", "b"))
     def runOrder(tag: String, order: Seq[Int]): Map[Long, Long] = {
       val dirf = java.nio.file.Files.createTempDirectory(s"w22_$tag").toString
-      order.foreach(i => ComponentsStream.absorb(deltas(i), "a", "b", dirf))
+      order.foreach(i => PageRankStream.absorb(deltas(i), "a", "b", dirf))
       ComponentsStream.fold(spark, dirf, verts, "id")
         .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
     }
