@@ -19,6 +19,15 @@ import SparkEntry._
   * text fingerprint-identical (graft.Fingerprint). */
 private[graft] object SparkEntrySources {
 
+  /** One judged pruned-read row: the scan's fingerprint over `cols`
+    * beside the (opened, skipped) dir counts of that same scan. */
+  private def scanRow(phase: Long, sc: graft.ops.Snapshots.Scan,
+                      cols: Seq[String]): DataFrame =
+    Validations.tableFingerprint(sc.frame, cols)
+      .select(lit(phase).as("phase"), col("n_rows"), col("fingerprint"),
+        lit(sc.opened.toLong).as("opened"),
+        lit(sc.skipped.toLong).as("skipped"))
+
   val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
 
     // S3 transposed key/value sheet: (key,value) rows pivot into one wide
@@ -494,7 +503,7 @@ private[graft] object SparkEntrySources {
     // S26 — FILE SKIPPING via manifest min/max stats (round-15; the
     // Iceberg/Delta file-stats read path, the first-order lakehouse read
     // optimization): commitAppendStats records each delta's stats-column
-    // range in the manifest; readPruned answers a range predicate
+    // range in the manifest; a Range scan answers a range predicate
     // opening ONLY the deltas whose range can match (stats-less dirs are
     // never skipped — optimization, not semantics). Fixture: four
     // SF-adaptive quartile appends (the fourth deliberately stats-less)
@@ -523,14 +532,9 @@ private[graft] object SparkEntrySources {
         cust.filter(pmod(col("c_custkey"), lit(5)) === 0)
           .select(col("c_custkey")), root, "c_custkey")
       val cols = Seq("c_custkey", "c_mktsegment")
-      def phase(n: Long, lo: Long, hi: Long) = {
-        val (opened, skipped) =
-          Snapshots.pruneCounts(s, root, "c_custkey", lo, hi)
-        Validations.tableFingerprint(
-            Snapshots.readPruned(s, root, "c_custkey", lo, hi), cols)
-          .select(lit(n).as("phase"), col("n_rows"), col("fingerprint"),
-            lit(opened.toLong).as("opened"), lit(skipped.toLong).as("skipped"))
-      }
+      def phase(n: Long, lo: Long, hi: Long) = scanRow(n,
+        Snapshots.scan(s, root, Snapshots.Where.Range("c_custkey", lo, hi)),
+        cols)
       phase(1L, 1L, q1).union(phase(2L, q1 + 1, q3))
         .union(phase(3L, 1L, maxK))
     }),
@@ -575,14 +579,9 @@ private[graft] object SparkEntrySources {
         cust.filter(col("c_custkey") > q2 && col("c_custkey") <= q3),
         root, "c_custkey")
       val cols = Seq("c_custkey", "c_mktsegment")
-      def phase(n: Long, lo: Long, hi: Long) = {
-        val (opened, skipped) =
-          Snapshots.pruneCounts(s, root, "c_custkey", lo, hi)
-        Validations.tableFingerprint(
-            Snapshots.readPruned(s, root, "c_custkey", lo, hi), cols)
-          .select(lit(n).as("phase"), col("n_rows"), col("fingerprint"),
-            lit(opened.toLong).as("opened"), lit(skipped.toLong).as("skipped"))
-      }
+      def phase(n: Long, lo: Long, hi: Long) = scanRow(n,
+        Snapshots.scan(s, root, Snapshots.Where.Range("c_custkey", lo, hi)),
+        cols)
       val p1 = phase(1L, 1L, q1) // opens q1 dir + merge payload, skips q2/q3
       Snapshots.commitRewrite(s, root)
       Snapshots.commitAppendStats(
@@ -650,8 +649,8 @@ private[graft] object SparkEntrySources {
     // VERDICT's #6, the standard complement to s26's range stats —
     // Iceberg's puffin blooms, parquet's column-index blooms): each
     // bloom'd dir carries a `_bloom_<col>` sidecar built by Spark's own
-    // bloomFilter aggregate; readPoint(column = v) opens a dir only if
-    // its range stats admit v AND its Bloom might contain v. Error is
+    // bloomFilter aggregate; a Point scan (column = v) opens a dir only
+    // if its range stats admit v AND its Bloom might contain v. Error is
     // one-sided by construction: a Bloom can only OPEN extra dirs,
     // never skip one holding the value. Fixture: three bloom'd dirs
     // with disjoint modular key classes (%4 = 1/2/3) + one bare dir
@@ -684,13 +683,8 @@ private[graft] object SparkEntrySources {
       val (v1, v2, v3) =
         (probes.getLong(0), probes.getLong(1) + 17L, probes.getLong(2))
       val cols = Seq("c_custkey", "c_mktsegment")
-      def phase(n: Long, v: Long) = {
-        val (opened, skipped) = Snapshots.pointCounts(s, root, "c_custkey", v)
-        Validations.tableFingerprint(
-            Snapshots.readPoint(s, root, "c_custkey", v), cols)
-          .select(lit(n).as("phase"), col("n_rows"), col("fingerprint"),
-            lit(opened.toLong).as("opened"), lit(skipped.toLong).as("skipped"))
-      }
+      def phase(n: Long, v: Long) = scanRow(n,
+        Snapshots.scan(s, root, Snapshots.Where.Point("c_custkey", v)), cols)
       phase(1L, v1).union(phase(2L, v2)).union(phase(3L, v3))
     }),
 
@@ -730,13 +724,8 @@ private[graft] object SparkEntrySources {
         cust.filter(pmod(col("c_custkey"), lit(5)) === 0)
           .select(col("c_custkey")), root, "c_custkey")
       val cols = Seq("c_custkey", "c_mktsegment")
-      def phase(n: Long, rowBp: Int, dirBp: Int) = {
-        val (opened, skipped) = Snapshots.sampleCounts(s, root, dirBp)
-        Validations.tableFingerprint(
-            Snapshots.readSampled(s, root, rowBp, dirBp), cols)
-          .select(lit(n).as("phase"), col("n_rows"), col("fingerprint"),
-            lit(opened.toLong).as("opened"), lit(skipped.toLong).as("skipped"))
-      }
+      def phase(n: Long, rowBp: Int, dirBp: Int) =
+        scanRow(n, Snapshots.readSampled(s, root, rowBp, dirBp), cols)
       phase(1L, 10000, 10000).union(phase(2L, 10000, 5000))
         .union(phase(3L, 2500, 10000)).union(phase(4L, 5000, 2000))
     }),
@@ -1168,7 +1157,7 @@ private[graft] object SparkEntrySources {
     // log.
     "s35_hidden_partitioning" -> ((s, dir) => {
       import graft.ops.Snapshots
-      import graft.ops.Snapshots.{TruncateTransform, BucketTransform}
+      import graft.ops.Snapshots.{TruncateTransform, BucketTransform, Where}
       val root = s"$partScratchDir/${dirKey(dir)}_s35"
       val broot = s"$partScratchDir/${dirKey(dir)}_s35b"
       rmTree(root); rmTree(broot)
@@ -1179,20 +1168,14 @@ private[graft] object SparkEntrySources {
       val mm = ev.agg(min(col("ts_us")), max(col("ts_us"))).collect()(0)
       val (t0, t1v) = (mm.getLong(0), mm.getLong(1))
       val (lo, hi) = (t0 + (t1v - t0) / 4, t0 + (t1v - t0) / 2)
-      val (o1, k1) = Snapshots.hiddenRangeCounts(s, root, dayT, lo, hi)
       val cols = Seq("event_id", "user_id", "ts_us")
-      val p1 = Validations.tableFingerprint(
-          Snapshots.readHiddenRange(s, root, dayT, lo, hi), cols)
-        .select(lit(1L).as("phase"), col("n_rows"), col("fingerprint"),
-          lit(o1.toLong).as("opened"), lit(k1.toLong).as("skipped"))
+      val p1 = scanRow(1L, Snapshots.scan(s, root,
+        Where.Hidden(dayT, Where.Range("ts_us", lo, hi))), cols)
       val bT = BucketTransform("user_id", 16)
       Snapshots.commitAppendHidden(ev, broot, bT)
       val probe = ev.agg(max(col("user_id"))).collect()(0).getLong(0)
-      val (o2, k2) = Snapshots.hiddenPointCounts(s, broot, bT, probe)
-      val p2 = Validations.tableFingerprint(
-          Snapshots.readHiddenPoint(s, broot, bT, probe), cols)
-        .select(lit(2L).as("phase"), col("n_rows"), col("fingerprint"),
-          lit(o2.toLong).as("opened"), lit(k2.toLong).as("skipped"))
+      val p2 = scanRow(2L, Snapshots.scan(s, broot,
+        Where.Hidden(bT, Where.Point("user_id", probe))), cols)
       p1.union(p2)
     }),
 
@@ -1261,13 +1244,14 @@ private[graft] object SparkEntrySources {
     // evidence — dir count == surviving-day count, both delete
     // backlogs folded away; 3 = a point lookup on the clustered
     // customer table opens exactly 1 of 4 range-disjoint dirs (range
-    // stats + per-dir rebuilt blooms); 4 = the full read is lossless
-    // and opens all 4. At 100 TB this is the nightly compaction every
-    // lakehouse schedules: the delete backlog folds away AND the
-    // layout that makes reads cheap is rebuilt, never silently lost.
+    // stats + per-dir rebuilt blooms); 4 = a full-range scan is
+    // lossless and opens all 4. At 100 TB this is the nightly
+    // compaction every lakehouse schedules: the delete backlog folds
+    // away AND the layout that makes reads cheap is rebuilt, never
+    // silently lost.
     "s37_optimize" -> ((s, dir) => {
       import graft.ops.Snapshots
-      import graft.ops.Snapshots.TruncateTransform
+      import graft.ops.Snapshots.{TruncateTransform, Where}
       val root = s"$partScratchDir/${dirKey(dir)}_s37"
       val root2 = s"$partScratchDir/${dirKey(dir)}_s37c"
       rmTree(root); rmTree(root2)
@@ -1282,12 +1266,9 @@ private[graft] object SparkEntrySources {
       val mm = ev.agg(min(col("ts_us")), max(col("ts_us"))).collect()(0)
       val (t0, t1v) = (mm.getLong(0), mm.getLong(1))
       val (lo, hi) = (t0 + (t1v - t0) / 4, t0 + (t1v - t0) / 2)
-      val (o1, k1) = Snapshots.hiddenRangeCounts(s, root, dayT, lo, hi)
       val cols = Seq("event_id", "user_id", "ts_us")
-      val p1 = Validations.tableFingerprint(
-          Snapshots.readHiddenRange(s, root, dayT, lo, hi), cols)
-        .select(lit(1L).as("phase"), col("n_rows"), col("fingerprint"),
-          lit(o1.toLong).as("opened"), lit(k1.toLong).as("skipped"))
+      val p1 = scanRow(1L, Snapshots.scan(s, root,
+        Where.Hidden(dayT, Where.Range("ts_us", lo, hi))), cols)
       val after = Snapshots.current(s, root).get
       import s.implicits._
       val p2 = Seq((2L, after.dataDirs.size.toLong,
@@ -1305,16 +1286,10 @@ private[graft] object SparkEntrySources {
       val probe = cust.filter(pmod(col("c_custkey"), lit(5)) =!= 0)
         .agg(max(col("c_custkey"))).collect()(0).getLong(0)
       val ccols = Seq("c_custkey", "c_mktsegment")
-      val (o3, k3) = Snapshots.pointCounts(s, root2, "c_custkey", probe)
-      val p3 = Validations.tableFingerprint(
-          Snapshots.readPoint(s, root2, "c_custkey", probe), ccols)
-        .select(lit(3L).as("phase"), col("n_rows"), col("fingerprint"),
-          lit(o3.toLong).as("opened"), lit(k3.toLong).as("skipped"))
-      val (o4, k4) = Snapshots.pruneCounts(s, root2, "c_custkey",
-        1L, Long.MaxValue / 2)
-      val p4 = Validations.tableFingerprint(Snapshots.read(s, root2), ccols)
-        .select(lit(4L).as("phase"), col("n_rows"), col("fingerprint"),
-          lit(o4.toLong).as("opened"), lit(k4.toLong).as("skipped"))
+      val p3 = scanRow(3L,
+        Snapshots.scan(s, root2, Where.Point("c_custkey", probe)), ccols)
+      val p4 = scanRow(4L, Snapshots.scan(s, root2,
+        Where.Range("c_custkey", 1L, Long.MaxValue / 2)), ccols)
       p1.union(p2).union(p3).union(p4)
     }),
 
@@ -1324,7 +1299,7 @@ private[graft] object SparkEntrySources {
     // string bounds for exactly this). commitAppendStats on a string
     // column now records 16-byte truncated bounds (lower = byte
     // prefix, upper = prefix-successor — sound in the unsigned byte
-    // order both engines sort strings by); readPrunedStr/readPointStr
+    // order both engines sort strings by); StrRange/StrPoint scans
     // skip on them, and blooms handle string keys natively. Fixture:
     // zero-padded 'CUST-%011d (16 bytes — exact, untruncated bounds)' keys (lexical order == numeric order,
     // so the oracle replants ranges as numeric predicates) — three
@@ -1364,14 +1339,9 @@ private[graft] object SparkEntrySources {
         cust.filter(pmod(col("c_custkey"), lit(5)) === 0)
           .select(col("skey")), root, "skey")
       val cols = Seq("skey", "c_mktsegment")
-      def phase(n: Long, lo: String, hi: String) = {
-        val (opened, skipped) =
-          Snapshots.pruneCountsStr(s, root, "skey", lo, hi)
-        Validations.tableFingerprint(
-            Snapshots.readPrunedStr(s, root, "skey", lo, hi), cols)
-          .select(lit(n).as("phase"), col("n_rows"), col("fingerprint"),
-            lit(opened.toLong).as("opened"), lit(skipped.toLong).as("skipped"))
-      }
+      def phase(n: Long, lo: String, hi: String) = scanRow(n,
+        Snapshots.scan(s, root, Snapshots.Where.StrRange("skey", lo, hi)),
+        cols)
       val p1 = phase(1L, key(q1 + 1), key(q3))
       val p2 = phase(2L, key(maxK + 1), key(maxK + 1000000))
       for (m <- Seq(1, 2, 3))
@@ -1384,13 +1354,8 @@ private[graft] object SparkEntrySources {
           .select(col("skey"), col("c_mktsegment")), broot)
       val hitK = cust.filter(pmod(col("c_custkey"), lit(4)) === 1)
         .agg(max(col("c_custkey"))).collect()(0).getLong(0)
-      def pointPhase(n: Long, v: String) = {
-        val (opened, skipped) = Snapshots.pointCountsStr(s, broot, "skey", v)
-        Validations.tableFingerprint(
-            Snapshots.readPointStr(s, broot, "skey", v), cols)
-          .select(lit(n).as("phase"), col("n_rows"), col("fingerprint"),
-            lit(opened.toLong).as("opened"), lit(skipped.toLong).as("skipped"))
-      }
+      def pointPhase(n: Long, v: String) = scanRow(n,
+        Snapshots.scan(s, broot, Snapshots.Where.StrPoint("skey", v)), cols)
       val p3 = pointPhase(3L, key(hitK))
       // a WITHIN-range absent key ('Z' suffix sorts between neighbors):
       // every dir's range admits it, so only the blooms can skip — and
@@ -1402,7 +1367,7 @@ private[graft] object SparkEntrySources {
     // S39 — PARTITION-SPEC EVOLUTION (round-17; the r16 VERDICT's #4,
     // Iceberg's per-spec pruning): a table whose hidden-partition
     // layout CHANGED over its life — here bucket(8) then bucket(16) on
-    // user_id — holds dirs of both generations, and readHiddenAuto
+    // user_id — holds dirs of both generations, and a Dnf scan
     // prunes EACH dir under its own spec, parsed back from the
     // synthetic stats name (the manifest is the spec registry). An
     // equality delete rides across both generations. Phases pin
@@ -1431,13 +1396,9 @@ private[graft] object SparkEntrySources {
       val agg = ev.agg(max(col("user_id")), min(col("user_id"))).collect()(0)
       val (probe, umin) = (agg.getLong(0), agg.getLong(1))
       val cols = Seq("event_id", "user_id")
-      def phase(n: Long, lo: Long, hi: Long) = {
-        val (o, k) = Snapshots.hiddenAutoCounts(s, root, "user_id", lo, hi)
-        Validations.tableFingerprint(
-            Snapshots.readHiddenAuto(s, root, "user_id", lo, hi), cols)
-          .select(lit(n).as("phase"), col("n_rows"), col("fingerprint"),
-            lit(o.toLong).as("opened"), lit(k.toLong).as("skipped"))
-      }
+      def phase(n: Long, lo: Long, hi: Long) = scanRow(n,
+        Snapshots.scan(s, root, Snapshots.Where.Dnf.all(
+          Snapshots.Where.Range("user_id", lo, hi))), cols)
       phase(1L, probe, probe).union(phase(2L, umin, umin + 1))
         .union(phase(3L, umin, probe))
     }),
@@ -1559,7 +1520,7 @@ private[graft] object SparkEntrySources {
     // multi-field partition specs): the event log lands as one dir per
     // (day, user-bucket) TUPLE — day × bucket(8) is the canonical
     // 100-TB event layout — each dir carrying one synthetic stats line
-    // PER transform, and readHiddenAutoMulti opens a dir only when
+    // PER transform, and a conjunctive Dnf scan opens a dir only when
     // EVERY axis admits: a (time window AND user) predicate prunes
     // MULTIPLICATIVELY. An equality delete rides across. Phases pin
     // (opened, skipped) derived in-oracle from the data's own
@@ -1570,7 +1531,7 @@ private[graft] object SparkEntrySources {
     // their intersection — from dirs proportional to the answer.
     "s42_multidim_partitioning" -> ((s, dir) => {
       import graft.ops.Snapshots
-      import graft.ops.Snapshots.{TruncateTransform, BucketTransform}
+      import graft.ops.Snapshots.{TruncateTransform, BucketTransform, Where}
       val root = s"$partScratchDir/${dirKey(dir)}_s42"
       rmTree(root)
       val ev = t(s, dir, "events").select(
@@ -1586,22 +1547,12 @@ private[graft] object SparkEntrySources {
       val (t0, t1v, probe) = (mm.getLong(0), mm.getLong(1), mm.getLong(2))
       val (lo, hi) = (t0 + (t1v - t0) / 4, t0 + (t1v - t0) / 2)
       val cols = Seq("event_id", "user_id", "ts_us")
-      def fp(n: Long, d: org.apache.spark.sql.DataFrame,
-             oc: (Int, Int)) =
-        Validations.tableFingerprint(d, cols)
-          .select(lit(n).as("phase"), col("n_rows"), col("fingerprint"),
-            lit(oc._1.toLong).as("opened"), lit(oc._2.toLong).as("skipped"))
-      val both = Seq(("ts_us", lo, hi), ("user_id", probe, probe))
-      val p1 = fp(1L,
-        Snapshots.readHiddenAutoMulti(s, root, both),
-        Snapshots.hiddenAutoMultiCounts(s, root, both))
-      val p2 = fp(2L,
-        Snapshots.readHiddenAuto(s, root, "ts_us", lo, hi),
-        Snapshots.hiddenAutoCounts(s, root, "ts_us", lo, hi))
-      val p3 = fp(3L,
-        Snapshots.readHiddenPointAuto(s, root, "user_id", probe),
-        Snapshots.hiddenPointAutoCounts(s, root, "user_id", probe))
-      p1.union(p2).union(p3)
+      def phase(n: Long, where: Where) =
+        scanRow(n, Snapshots.scan(s, root, where), cols)
+      val window = Where.Range("ts_us", lo, hi)
+      phase(1L, Where.Dnf.all(window, Where.Range("user_id", probe, probe)))
+        .union(phase(2L, Where.Dnf.all(window)))
+        .union(phase(3L, Where.Dnf.all(Where.Point("user_id", probe))))
     }),
 
     // S43 — STRING hidden partitioning (round-18; the r17 VERDICT's
@@ -1620,7 +1571,7 @@ private[graft] object SparkEntrySources {
     // per-study fetches from its own dirs with no surrogate column.
     "s43_string_partitioning" -> ((s, dir) => {
       import graft.ops.Snapshots
-      import graft.ops.Snapshots.{BucketStrTransform, TruncateStrTransform}
+      import graft.ops.Snapshots.{BucketStrTransform, TruncateStrTransform, Where}
       val root = s"$partScratchDir/${dirKey(dir)}_s43t"
       val rootB = s"$partScratchDir/${dirKey(dir)}_s43b"
       rmTree(root); rmTree(rootB)
@@ -1637,21 +1588,12 @@ private[graft] object SparkEntrySources {
       val (lo, hi) = (sid(n / 4), sid(n / 2))
       val probe = sid(n - 1)
       val cols = Seq("sid", "n_chars")
-      def fp(ph: Long, d: org.apache.spark.sql.DataFrame,
-             oc: (Int, Int)) =
-        Validations.tableFingerprint(d, cols)
-          .select(lit(ph).as("phase"), col("n_rows"), col("fingerprint"),
-            lit(oc._1.toLong).as("opened"), lit(oc._2.toLong).as("skipped"))
-      val p1 = fp(1L,
-        Snapshots.readHiddenRangeStr(s, root, t7, lo, hi),
-        Snapshots.hiddenRangeStrCounts(s, root, t7, lo, hi))
-      val p2 = fp(2L,
-        Snapshots.readHiddenPointStr(s, rootB, b8, probe),
-        Snapshots.hiddenPointStrCounts(s, rootB, b8, probe))
-      val p3 = fp(3L,
-        Snapshots.readHiddenRangeStr(s, root, t7, sid(0L), sid(n - 1)),
-        Snapshots.hiddenRangeStrCounts(s, root, t7, sid(0L), sid(n - 1)))
-      p1.union(p2).union(p3)
+      def phase(ph: Long, table: String, where: Where) =
+        scanRow(ph, Snapshots.scan(s, table, where), cols)
+      phase(1L, root, Where.Hidden(t7, Where.StrRange("sid", lo, hi)))
+        .union(phase(2L, rootB, Where.Hidden(b8, Where.StrPoint("sid", probe))))
+        .union(phase(3L, root,
+          Where.Hidden(t7, Where.StrRange("sid", sid(0L), sid(n - 1)))))
     }),
 
     // S44 — SQL-TEXT DML on snapshot tables (round-18; the r17
@@ -1724,7 +1666,7 @@ private[graft] object SparkEntrySources {
 
     // S45 — DISJUNCTIVE pruning (round-18; the r17 VERDICT's #5):
     // IN-lists and OR predicates — routine on tenant dashboards —
-    // used to fall back to open-everything; readHiddenAutoDisj admits
+    // used to fall back to open-everything; a Dnf scan admits
     // a dir when ANY disjunct admits it, so they prune like their
     // conjunctive duals. Phases, each with in-oracle (opened, skipped)
     // from the data's own occupancy: 1 = a three-user IN-list on a
@@ -1735,7 +1677,7 @@ private[graft] object SparkEntrySources {
     // corpus.
     "s45_disjunctive_pruning" -> ((s, dir) => {
       import graft.ops.Snapshots
-      import graft.ops.Snapshots.{BucketTransform, TruncateTransform}
+      import graft.ops.Snapshots.{BucketTransform, TruncateTransform, Where}
       val D = 86400000000L
       val rootB = s"$partScratchDir/${dirKey(dir)}_s45b"
       val rootT = s"$partScratchDir/${dirKey(dir)}_s45t"
@@ -1757,26 +1699,15 @@ private[graft] object SparkEntrySources {
       val (w1lo, w1hi) = (t0, t0 + (t1v - t0) / 8)
       val (w2lo, w2hi) = (t0 + (t1v - t0) / 2, t0 + 5L * (t1v - t0) / 8)
       val cols = Seq("event_id", "user_id", "ts_us")
-      def fp(ph: Long, d: org.apache.spark.sql.DataFrame,
-             oc: (Int, Int)) =
-        Validations.tableFingerprint(d, cols)
-          .select(lit(ph).as("phase"), col("n_rows"), col("fingerprint"),
-            lit(oc._1.toLong).as("opened"), lit(oc._2.toLong).as("skipped"))
-      val inList = Seq(u1, u2, u3)
-      val p1 = fp(1L,
-        Snapshots.readHiddenAutoIn(s, rootB, "user_id", inList),
-        Snapshots.hiddenAutoInCounts(s, rootB, "user_id", inList))
-      val orWindows = Seq(Seq(("ts_us", w1lo, w1hi)),
-        Seq(("ts_us", w2lo, w2hi)))
-      val p2 = fp(2L,
-        Snapshots.readHiddenAutoDisj(s, rootT, orWindows),
-        Snapshots.hiddenAutoDisjCounts(s, rootT, orWindows))
-      val mixed = Seq(Seq(("user_id", u1, u1)),
-        Seq(("user_id", u2, u2 + 1)))
-      val p3 = fp(3L,
-        Snapshots.readHiddenAutoDisj(s, rootB, mixed),
-        Snapshots.hiddenAutoDisjCounts(s, rootB, mixed))
-      p1.union(p2).union(p3)
+      def phase(ph: Long, table: String, where: Where.Dnf) =
+        scanRow(ph, Snapshots.scan(s, table, where), cols)
+      val orWindows = Where.Dnf(Seq(Seq(Where.Range("ts_us", w1lo, w1hi)),
+        Seq(Where.Range("ts_us", w2lo, w2hi))))
+      val mixed = Where.Dnf(Seq(Seq(Where.Range("user_id", u1, u1)),
+        Seq(Where.Range("user_id", u2, u2 + 1))))
+      phase(1L, rootB, Where.Dnf.in("user_id", Seq(u1, u2, u3)))
+        .union(phase(2L, rootT, orWindows))
+        .union(phase(3L, rootB, mixed))
     }),
 
     // S46 — BRANCH reads below the SQL surface (round-18; the r17

@@ -21,8 +21,10 @@ import org.apache.spark.sql.functions._
   * Scale notes: labels are O(V) and each round shuffles O(E + V) on the
   * vertex id — same profile as one GraphX Pregel superstep. Lineage is
   * cut per round by [[Fixpoint.converge]], the round's convergence
-  * checksum materializing the cut: without a cut, round k re-executes
-  * rounds 1..k-1. Convergence is detected by the label-sum invariant:
+  * checksum materializing the cut: one action per round (under AQE the
+  * cut's shuffle stages run as their own jobs when the cut is built).
+  * Without a cut, round k re-executes rounds 1..k-1. Convergence is
+  * detected by the label-sum invariant:
   * labels only ever decrease, so the sum of labels is strictly
   * decreasing until fixpoint (summed as decimal(38,0) — no overflow at
   * any V).

@@ -51,17 +51,20 @@ object Fixpoint {
   /** Cut `df` so that the next action on it materializes the cut: lazily
     * when `strategy` resolves to local checkpoints (a lazy
     * localCheckpoint persists its blocks during the first action that
-    * computes them — the same job), eagerly when it resolves to reliable
-    * ones (a lazy reliable checkpoint re-runs the lineage in a separate
-    * job to write its files). */
+    * computes them — no extra action; under AQE the cut's shuffle stages
+    * still run as their own jobs when the cut is built), eagerly when it
+    * resolves to reliable ones (a lazy reliable checkpoint re-runs the
+    * lineage in a separate job to write its files). */
   private[graft] def cutForAction(df: DataFrame, strategy: Cascade.Strategy): DataFrame =
     Cascade.cut(df, strategy,
       eager = df.sparkSession.sparkContext.getCheckpointDir.isDefined)
 
   /** Iterate `step` from `init` until `signature` (one action) stops
     * changing. Every state is cut by [[cutForAction]], so the signature
-    * action computes the round AND materializes its cut in one job — one
-    * action per round. `maxIter` bounds the step rounds; convergence is
+    * action computes the round AND materializes its cut — one action per
+    * round. That is not one job per round: under AQE the cut's shuffle
+    * stages run as their own jobs when the cut is built, before the
+    * signature action. `maxIter` bounds the step rounds; convergence is
     * only OBSERVED by a round whose signature does not move, so one
     * extra confirmation round is allowed (a fixpoint reached exactly at
     * round `maxIter` still counts). Not converging is an error, or a

@@ -813,7 +813,7 @@ object Snapshots {
 
   /** [[commitAppend]] that additionally records the delta's min/max of
     * long-typed `statsCol` in the manifest — the Iceberg/Delta file-
-    * stats convention that makes [[readPruned]] skip whole deltas whose
+    * stats convention that makes [[scan]] skip whole deltas whose
     * range cannot match a predicate. Later plain appends/deletes
     * PRESERVE earlier dirs' stats (they ride every child manifest), and
     * [[commitMergeKeyed]]/[[commitRewrite]] MAINTAIN them on the dirs
@@ -824,7 +824,7 @@ object Snapshots {
     commitAppendStats(df, tableDir, Seq(statsCol), tag)
 
   /** Multi-column [[commitAppendStats]]: one manifest stats line per
-    * (dir, column); [[readPruned]] prunes on any recorded column. */
+    * (dir, column); [[scan]] prunes on any recorded column. */
   def commitAppendStats(df: DataFrame, tableDir: String,
                         statsCols: Seq[String],
                         tag: Option[String]): Long = {
@@ -935,7 +935,7 @@ object Snapshots {
     * keys: [[Scale.zorder]]'s Morton interleave, so every dir covers a
     * tight box in EVERY keyed dimension), and per-dir min/max stats
     * are recorded for the sort keys AND the table's established stats
-    * columns — [[readPruned]]/[[readPoint]] then skip dirs the way
+    * columns — [[scan]]'s range and point cases then skip dirs the way
     * s18's zone maps skip files. On a hidden-partitioned table the
     * sort orders rows WITHIN each preserved per-value dir instead.
     * `targetBytes <= 0` keeps the dir count (one dir plain, per-value
@@ -1297,12 +1297,12 @@ object Snapshots {
 
   /** One data dir's rows at snapshot `snap` with every delete committed
     * AFTER it applied — the shared merge-on-read kernel of [[read]] /
-    * [[readPruned]] / [[readWithPos]]:
+    * [[scan]] / [[readWithPos]]:
     *  - POSITION deletes anti-join on the (file, row-ordinal) address,
     *    scoped to this dir (the address frame is row-address-sized —
     *    three narrow columns — so the anti-join side broadcasts);
     *  - EQUALITY deletes anti-join the key column as before.
-    * `preFilter` (readPruned's range predicate) runs before the delete
+    * `preFilter` (a pruned scan's residual) runs before the delete
     * joins so it reaches the parquet scan as a pushed filter. `withPos`
     * keeps the (_dir, _file, _pos) address columns on the output —
     * [[readWithPos]]'s contract; otherwise the address never surfaces
@@ -1393,8 +1393,7 @@ object Snapshots {
 
   /** Remap manifest stats keys through the ops applicable to each dir —
     * stats are manifest data, so keeping them under LOGICAL names is
-    * free and lets [[readPruned]]/[[readPoint]] keep skipping across a
-    * rename. Idempotent (guards mirror [[applySchemaOps]]'s), so
+    * free and lets [[scan]] keep skipping across a rename. Idempotent (guards mirror [[applySchemaOps]]'s), so
     * re-running the full op list over already-remapped maps is safe. */
   private def remapStats[V](stats: Map[String, Map[String, V]],
                             ops: Seq[SchemaOp]): Map[String, Map[String, V]] =
@@ -1684,14 +1683,16 @@ object Snapshots {
     * snapshot id or an empty table — silent empty frames would mask a
     * pointer/manifest bug. */
   def read(spark: SparkSession, tableDir: String,
-           snapshotId: Option[Long] = None): DataFrame = {
-    val snap = snapshotId
-      .map(i => get(spark, tableDir, i).getOrElse(
-        sys.error(s"no snapshot snap-$i under $tableDir")))
-      .getOrElse(current(spark, tableDir).getOrElse(
-        sys.error(s"empty snapshot table $tableDir")))
-    readAt(spark, tableDir, snap)
-  }
+           snapshotId: Option[Long] = None): DataFrame =
+    readAt(spark, tableDir, resolve(spark, tableDir, snapshotId))
+
+  /** The snapshot a read pins: `snapshotId`, or the current one. */
+  private def resolve(spark: SparkSession, tableDir: String,
+                      snapshotId: Option[Long]): Snapshot = snapshotId
+    .map(i => get(spark, tableDir, i).getOrElse(
+      sys.error(s"no snapshot snap-$i under $tableDir")))
+    .getOrElse(current(spark, tableDir).getOrElse(
+      sys.error(s"empty snapshot table $tableDir")))
 
   /** [[read]] from an already-resolved snapshot — split out so
     * [[changesBetween]] can read the FROM state under the TO
@@ -1720,11 +1721,7 @@ object Snapshots {
     * same commit. */
   def readWithPos(spark: SparkSession, tableDir: String,
                   snapshotId: Option[Long] = None): DataFrame = {
-    val snap = snapshotId
-      .map(i => get(spark, tableDir, i).getOrElse(
-        sys.error(s"no snapshot snap-$i under $tableDir")))
-      .getOrElse(current(spark, tableDir).getOrElse(
-        sys.error(s"empty snapshot table $tableDir")))
+    val snap = resolve(spark, tableDir, snapshotId)
     val frames = groupedMaskedFrames(spark, tableDir, snap,
       (_, _) => true, None, withPos = true)
     require(frames.nonEmpty, s"snapshot snap-${snap.id} lists no data dirs")
@@ -1772,81 +1769,176 @@ object Snapshots {
     won
   }
 
-  /** [[read]] with FILE SKIPPING — the Iceberg/Delta stats-pruned scan:
-    * returns exactly `read().filter(column BETWEEN lo AND hi)`, but any
-    * data dir whose [[commitAppendStats]]-recorded min/max range is
-    * DISJOINT from [lo, hi] is never opened (its rows cannot match, so
-    * neither its scan nor its delete anti-join runs). Dirs without
-    * stats are read and filtered normally — skipping is only ever an
-    * optimization, never a semantics change. At 100 TB this is the
-    * first-order read optimization of every lakehouse format: a
-    * time/key-range query on a range-clustered table touches the
-    * matching deltas only, paying for the answer, not the table. */
-  def readPruned(spark: SparkSession, tableDir: String, column: String,
-                 lo: Long, hi: Long,
-                 snapshotId: Option[Long] = None): DataFrame = {
+  /** One pruned read's outcome: the rows (`frame`, lazy) and how many of
+    * the snapshot's data dirs they come from (`opened`) and how many
+    * were never opened (`skipped`). Frame and counts come from ONE
+    * resolved snapshot and ONE admit decision per dir, so the counts
+    * always describe the frame: `opened + skipped` is that snapshot's
+    * data-dir count. The counts are the observable the file-skipping
+    * gates pin — skipping must actually happen, not just stay correct. */
+  final case class Scan(frame: DataFrame, opened: Int, skipped: Int)
+
+  /** A predicate [[scan]] can skip data dirs for — one case per admit
+    * rule. Every case reads exactly `read().filter(residual)`; the rule
+    * only decides which dirs can hold no matching row and are therefore
+    * never opened (neither their scan nor their delete anti-join runs).
+    * A dir without the metadata a rule needs always opens: skipping is
+    * only ever an optimization, never a semantics change. */
+  sealed trait Where {
+    /** the filter the opened dirs' rows still pass through */
+    private[graft] def residual: org.apache.spark.sql.Column
+  }
+
+  object Where {
     import org.apache.spark.sql.functions.col
+
+    /** A predicate on one source column. */
+    sealed trait On extends Where { def column: String }
+
+    /** A Long predicate as a closed range — the form [[Dnf]] judges. */
+    sealed trait Bounded extends On { def lo: Long; def hi: Long }
+
+    /** `column BETWEEN lo AND hi`: a dir whose [[commitAppendStats]]
+      * [min, max] on `column` is disjoint from [lo, hi] is skipped. At
+      * 100 TB a time/key-range query on a range-clustered table touches
+      * the matching deltas only, paying for the answer, not the table. */
+    final case class Range(column: String, lo: Long, hi: Long)
+        extends Bounded {
+      private[graft] def residual = col(column).between(lo, hi)
+    }
+
+    /** `column = value`: range stats exclude first, then the dir's Bloom
+      * sidecar ([[commitAppendBloom]]) proves absence. The Bloom tier is
+      * what makes key lookups on UNSORTED dirs cheap — a CDC table
+      * clustered by time answers "fetch key K" from the dirs whose
+      * filter admits K, not from every delta ever merged. */
+    final case class Point(column: String, value: Long) extends Bounded {
+      def lo: Long = value
+      def hi: Long = value
+      private[graft] def residual = col(column) === value
+    }
+
+    /** [[Range]] for STRING columns (the text-corpus case — doc-id keys,
+      * date strings): judged on the truncated UTF-8 byte bounds string
+      * stats record (see [[Snapshot]]). */
+    final case class StrRange(column: String, lo: String, hi: String)
+        extends On {
+      require(lo <= hi, s"need lo <= hi, got '$lo' > '$hi'")
+      private[graft] def residual = col(column).between(lo, hi)
+    }
+
+    /** [[Point]] for STRING keys: byte bounds exclude first, then the
+      * Bloom sidecar (Spark's bloomFilter aggregate handles strings). */
+    final case class StrPoint(column: String, value: String) extends On {
+      private[graft] def residual = col(column) === value
+    }
+
+    /** `on`, pruned through ONE hidden transform: a dir opens when the
+      * transform value it recorded lies in the value range `on` maps to
+      * ([[HiddenTransform.valueRange]]). Dirs without a value under this
+      * transform (pre-transform commits, null values, another spec)
+      * always open; [[Dnf]] is the spec-evolution-aware form. */
+    final case class Hidden(transform: HiddenTransform, on: On)
+        extends Where {
+      require(on.column == transform.column,
+        s"predicate on '${on.column}' cannot prune through a transform " +
+          s"of '${transform.column}'")
+      private[graft] def residual = on.residual
+    }
+
+    /** Spec-aware predicate in disjunctive normal form — an OR over
+      * conjunctions of Long ranges/points, possibly on several columns.
+      * A dir opens when ANY conjunction admits it, each conjunct judged
+      * under EVERY pruning contract the dir carries for its column (raw
+      * stats and each hidden transform's value, see [[hiddenAdmits]]).
+      * This is the reader for tables whose partition layout changed over
+      * their life (bucket(8) → bucket(16), day → week: old and new dirs
+      * each prune under their own spec, no rewrite), for day × bucket
+      * layouts (a window AND a user prune multiplicatively), and for
+      * IN-lists/ORs (without it they fell back to open-everything). */
+    final case class Dnf(disjuncts: Seq[Seq[Bounded]]) extends Where {
+      require(disjuncts.nonEmpty && disjuncts.forall(_.nonEmpty),
+        "at least one disjunct, each with at least one range")
+      private[graft] def residual =
+        disjuncts.map(_.map(_.residual).reduce(_ && _)).reduce(_ || _)
+    }
+
+    object Dnf {
+      /** one conjunction */
+      def all(conjuncts: Bounded*): Dnf = Dnf(Seq(conjuncts))
+      /** `column IN (values)` — one point disjunct per distinct value; on
+        * a bucketed table each value opens its one residue dir per spec
+        * generation */
+      def in(column: String, values: Seq[Long]): Dnf =
+        Dnf(values.distinct.map(v => Seq(Range(column, v, v))))
+    }
+  }
+
+  /** THE pruned read: exactly `read(snapshotId).filter(where)`, opening
+    * only the data dirs `where`'s admit rule cannot exclude, plus the
+    * (opened, skipped) counts of that same decision. The snapshot is
+    * resolved once and each dir judged once, from the manifest and the
+    * Bloom sidecars alone — no data IO. */
+  def scan(spark: SparkSession, tableDir: String, where: Where,
+           snapshotId: Option[Long] = None): Scan = {
     val snap = resolve(spark, tableDir, snapshotId)
-    statsPrunedRead(spark, tableDir, snap, column, lo, hi,
-      Some(col(column).between(lo, hi)))
+    // a dir whose recorded [min, max] on statsCol is disjoint from
+    // [lo, hi] is skipped; statsCol may be a real column or a synthetic
+    // transform-stats name that exists only in the manifest
+    def statsAdmit(statsCol: String, lo: Long, hi: Long)(d: String) =
+      snap.stats.get(d).flatMap(_.get(statsCol))
+        .forall { case (mn, mx) => mx >= lo && mn <= hi }
+    val admit: String => Boolean = where match {
+      case Where.Range(c, lo, hi) => statsAdmit(c, lo, hi)
+      case Where.Point(c, v) => pointOpens(spark, tableDir, snap, _, c, v)
+      case Where.StrRange(c, lo, hi) =>
+        val (qlo, qhi) = (lo.getBytes("UTF-8"), hi.getBytes("UTF-8"))
+        d => !sDisjoint(snap, d, c, qlo, qhi)
+      case Where.StrPoint(c, v) =>
+        pointOpensStr(spark, tableDir, snap, _, c, v)
+      case Where.Hidden(t, on) =>
+        val (lo, hi) = t.valueRange(on)
+        statsAdmit(t.statsName, lo, hi)
+      case Where.Dnf(disjuncts) => d => disjuncts.exists(_.forall(p =>
+        hiddenAdmits(snap, d, p.column, p.lo, p.hi)))
+    }
+    prunedScan(spark, tableDir, snap, (_, d) => admit(d),
+      Some(where.residual))
   }
 
-  private def resolve(spark: SparkSession, tableDir: String,
-                      snapshotId: Option[Long]): Snapshot = snapshotId
-    .map(i => get(spark, tableDir, i).getOrElse(
-      sys.error(s"no snapshot snap-$i under $tableDir")))
-    .getOrElse(current(spark, tableDir).getOrElse(
-      sys.error(s"empty snapshot table $tableDir")))
-
-  /** The shared stats-pruning scan: skip data dirs whose recorded
-    * [min, max] on `statsCol` is disjoint from [vlo, vhi], scan the
-    * rest through [[maskedDirScan]] with `preFilter` pushed to the
-    * parquet scan. `statsCol` may be a REAL column (readPruned) or a
-    * SYNTHETIC partition-transform column that exists only in the
-    * manifest (readHiddenRange/Point — the dirs' rows never carry it).
-    * A dir with stats on other columns only is simply stats-less for
-    * this predicate — never skipped, never an error: skipping is only
-    * ever an optimization. */
-  private def statsPrunedRead(spark: SparkSession, tableDir: String,
-                              snap: Snapshot, statsCol: String,
-                              vlo: Long, vhi: Long,
-                              preFilter: Option[org.apache.spark.sql.Column]): DataFrame = {
-    def disjoint(d: String): Boolean =
-      snap.stats.get(d).flatMap(_.get(statsCol)) match {
-        case Some((mn, mx)) => mx < vlo || mn > vhi
-        case None => false
-      }
-    val frames = groupedMaskedFrames(spark, tableDir, snap,
-      (_, d) => !disjoint(d), preFilter, withPos = false)
-    if (frames.isEmpty) {
-      // every dir pruned: an empty frame in the table's schema (cheap —
-      // one dir's schema read, zero row scans)
-      val empty = read(spark, tableDir, Some(snap.id)).limit(0)
-      preFilter.map(empty.filter).getOrElse(empty)
-    } else frames.reduce(_.unionByName(_, allowMissingColumns = true))
+  /** The one body every pruned read shares: judge each data dir ONCE
+    * (`admit` sees its data ordinal and name), build the frame from the
+    * admitted dirs, count from the same judgement. Admitted dirs scan as
+    * grouped runs with `residual` pushed to the parquet scan, unless
+    * `perDir` builds each one's frame from (entries index, data
+    * ordinal, dir). If nothing is admitted the frame is empty in the
+    * table's schema — one schema read of the SAME snapshot, zero row
+    * scans. */
+  private def prunedScan(spark: SparkSession, tableDir: String,
+                         snap: Snapshot, admit: (Int, String) => Boolean,
+                         residual: Option[org.apache.spark.sql.Column],
+                         perDir: Option[(Int, Int, String) => DataFrame] =
+                           None): Scan = {
+    val data = snap.entries.zipWithIndex.collect {
+      case ((DataEntry, d), i) => (i, d)
+    }
+    val open = data.zipWithIndex.collect {
+      case ((i, d), j) if admit(j, d) => (i, j, d)
+    }
+    val frames = perDir match {
+      case Some(build) => open.map(build.tupled)
+      case None =>
+        val idx = open.map(_._1).toSet
+        groupedMaskedFrames(spark, tableDir, snap, (i, _) => idx(i),
+          residual, withPos = false)
+    }
+    val frame =
+      if (frames.isEmpty) {
+        val empty = readAt(spark, tableDir, snap).limit(0)
+        residual.fold(empty)(empty.filter)
+      } else frames.reduce(_.unionByName(_, allowMissingColumns = true))
+    Scan(frame, open.size, data.size - open.size)
   }
-
-  /** (opened, skipped) counts for any stats-pruned scan — the judged
-    * observable shared by pruneCounts and the hidden-partitioning
-    * evidence functions. Manifest-only, no data IO. */
-  private def statsPruneCounts(snap: Snapshot, statsCol: String,
-                               vlo: Long, vhi: Long): (Int, Int) = {
-    val dirs = snap.dataDirs
-    val skipped = dirs.count(d =>
-      snap.stats.get(d).flatMap(_.get(statsCol)) match {
-        case Some((mn, mx)) => mx < vlo || mn > vhi
-        case None => false
-      })
-    (dirs.size - skipped, skipped)
-  }
-
-  /** (opened, skipped) data-dir counts [[readPruned]] would use for this
-    * predicate — the observable the s26 gate (and any ops dashboard)
-    * pins: skipping must actually happen, not just stay correct. */
-  def pruneCounts(spark: SparkSession, tableDir: String, column: String,
-                  lo: Long, hi: Long,
-                  snapshotId: Option[Long] = None): (Int, Int) =
-    statsPruneCounts(resolve(spark, tableDir, snapshotId), column, lo, hi)
 
   /** Whether dir `d`'s recorded string bounds on `column` EXCLUDE the
     * query range [qlo, qhi] (UTF-8 byte order — Spark's and DuckDB's
@@ -1860,68 +1952,6 @@ object Snapshots {
         byteCompare(unb64(hi), qlo) < 0 || byteCompare(unb64(lo), qhi) > 0
       case None => false
     }
-
-  /** [[readPruned]] for STRING-keyed tables (round-17; the text-corpus
-    * case — doc-id keys, date strings — that Long-only stats left
-    * unskipped): exactly `read().filter(column BETWEEN lo AND hi)`,
-    * but a data dir whose truncated byte bounds exclude the range is
-    * never opened. At 100 TB a doc-id range fetch on an id-clustered
-    * corpus opens its deltas, not the corpus. */
-  def readPrunedStr(spark: SparkSession, tableDir: String, column: String,
-                    lo: String, hi: String,
-                    snapshotId: Option[Long] = None): DataFrame = {
-    import org.apache.spark.sql.functions.col
-    require(lo <= hi, s"need lo <= hi, got '$lo' > '$hi'")
-    val snap = resolve(spark, tableDir, snapshotId)
-    val (qlo, qhi) = (lo.getBytes("UTF-8"), hi.getBytes("UTF-8"))
-    val frames = groupedMaskedFrames(spark, tableDir, snap,
-      (_, d) => !sDisjoint(snap, d, column, qlo, qhi),
-      Some(col(column).between(lo, hi)), withPos = false)
-    if (frames.isEmpty) {
-      val empty = read(spark, tableDir, Some(snap.id)).limit(0)
-      empty.filter(col(column).between(lo, hi))
-    } else frames.reduce(_.unionByName(_, allowMissingColumns = true))
-  }
-
-  /** (opened, skipped) evidence for [[readPrunedStr]]. */
-  def pruneCountsStr(spark: SparkSession, tableDir: String, column: String,
-                     lo: String, hi: String,
-                     snapshotId: Option[Long] = None): (Int, Int) = {
-    val snap = resolve(spark, tableDir, snapshotId)
-    val (qlo, qhi) = (lo.getBytes("UTF-8"), hi.getBytes("UTF-8"))
-    val dirs = snap.dataDirs
-    val skipped = dirs.count(d => sDisjoint(snap, d, column, qlo, qhi))
-    (dirs.size - skipped, skipped)
-  }
-
-  /** [[readPoint]] for STRING keys: range bounds exclude first, then
-    * the Bloom sidecar (built by the same [[commitAppendBloom]] —
-    * Spark's bloomFilter aggregate handles string columns natively)
-    * proves absence. Same one-sided-error contract as the long form. */
-  def readPointStr(spark: SparkSession, tableDir: String, column: String,
-                   value: String,
-                   snapshotId: Option[Long] = None): DataFrame = {
-    import org.apache.spark.sql.functions.col
-    val snap = resolve(spark, tableDir, snapshotId)
-    val frames = groupedMaskedFrames(spark, tableDir, snap,
-      (_, d) => pointOpensStr(spark, tableDir, snap, d, column, value),
-      Some(col(column) === value), withPos = false)
-    if (frames.isEmpty)
-      read(spark, tableDir, Some(snap.id)).limit(0)
-        .filter(col(column) === value)
-    else frames.reduce(_.unionByName(_, allowMissingColumns = true))
-  }
-
-  /** (opened, skipped) evidence for [[readPointStr]]. */
-  def pointCountsStr(spark: SparkSession, tableDir: String, column: String,
-                     value: String,
-                     snapshotId: Option[Long] = None): (Int, Int) = {
-    val snap = resolve(spark, tableDir, snapshotId)
-    val dirs = snap.dataDirs
-    val opened = dirs.count(d =>
-      pointOpensStr(spark, tableDir, snap, d, column, value))
-    (opened, dirs.size - opened)
-  }
 
   private def pointOpensStr(spark: SparkSession, tableDir: String,
                             snap: Snapshot, d: String, column: String,
@@ -1938,8 +1968,8 @@ object Snapshots {
 
   /** [[commitAppendStats]]'s point-lookup complement: additionally
     * builds a `_bloom_<bloomCol>` sidecar for the new dir (see
-    * [[buildBlooms]]), so [[readPoint]] can skip dirs that definitely
-    * do not hold a value — the standard pairing in every lakehouse
+    * [[buildBlooms]]), so [[scan]]'s point cases can skip dirs that
+    * definitely do not hold a value — the standard pairing in every lakehouse
     * format (range stats prune range predicates; Blooms prune
     * high-cardinality equality predicates that ranges can't, e.g. a
     * key lookup on an unsorted dir whose min/max span everything).
@@ -1957,7 +1987,7 @@ object Snapshots {
       Seq(bloomCol))
   }
 
-  /** Whether [[readPoint]] must open data dir `d` of `snap` for
+  /** Whether [[Where.Point]] must open data dir `d` of `snap` for
     * `column = value`: range stats exclude first (free), then the
     * Bloom sidecar is consulted (one tiny read, driver-side, at plan
     * time). Bloom error is one-sided: a false positive OPENS an extra
@@ -1978,47 +2008,6 @@ object Snapshots {
       case Some(bf) => bf.mightContainLong(value)
       case None => true // marked but unreadable: degrade to open
     }
-  }
-
-  /** POINT-lookup read with file skipping — exactly
-    * `read().filter(column === value)`, but a data dir is never opened
-    * when its range stats exclude `value` OR its Bloom sidecar proves
-    * absence. The Bloom tier is what makes key lookups on UNSORTED
-    * dirs cheap: a CDC table clustered by time answers "fetch key K"
-    * by opening only the dirs whose filter admits K — at 100 TB, a
-    * handful of dirs instead of every delta ever merged. */
-  def readPoint(spark: SparkSession, tableDir: String, column: String,
-                value: Long,
-                snapshotId: Option[Long] = None): DataFrame = {
-    import org.apache.spark.sql.functions.col
-    val snap = snapshotId
-      .map(i => get(spark, tableDir, i).getOrElse(
-        sys.error(s"no snapshot snap-$i under $tableDir")))
-      .getOrElse(current(spark, tableDir).getOrElse(
-        sys.error(s"empty snapshot table $tableDir")))
-    val frames = groupedMaskedFrames(spark, tableDir, snap,
-      (_, d) => pointOpens(spark, tableDir, snap, d, column, value),
-      Some(col(column) === value), withPos = false)
-    if (frames.isEmpty)
-      read(spark, tableDir, Some(snap.id)).limit(0)
-        .filter(col(column) === value)
-    else frames.reduce(_.unionByName(_, allowMissingColumns = true))
-  }
-
-  /** (opened, skipped) data-dir counts [[readPoint]] would use — the
-    * observable the s29 gate pins, as [[pruneCounts]] for s26. */
-  def pointCounts(spark: SparkSession, tableDir: String, column: String,
-                  value: Long,
-                  snapshotId: Option[Long] = None): (Int, Int) = {
-    val snap = snapshotId
-      .map(i => get(spark, tableDir, i).getOrElse(
-        sys.error(s"no snapshot snap-$i under $tableDir")))
-      .getOrElse(current(spark, tableDir).getOrElse(
-        sys.error(s"empty snapshot table $tableDir")))
-    val dirs = snap.dataDirs
-    val opened =
-      dirs.count(d => pointOpens(spark, tableDir, snap, d, column, value))
-    (opened, dirs.size - opened)
   }
 
   /** 48-bit md5 draw in [0, 10000) — the portable-hash twin every
@@ -2061,78 +2050,35 @@ object Snapshots {
     * draw is shared across a dir's files, not i.i.d. per row.
     * Deletes compose as everywhere else: the sample is drawn over
     * PHYSICAL addresses, then every delete committed after the dir
-    * masks as usual (a sampled-then-deleted row is gone). */
+    * masks as usual (a sampled-then-deleted row is gone).
+    *
+    * The [[Scan]]'s counts are the SYSTEM tier's: the dirs the draw
+    * opened and the dirs it never opened. */
   def readSampled(spark: SparkSession, tableDir: String,
                   rowRateBp: Int = 10000, dirRateBp: Int = 10000,
                   seed: String = "graft",
-                  snapshotId: Option[Long] = None): DataFrame = {
+                  snapshotId: Option[Long] = None): Scan = {
     import org.apache.spark.sql.functions.{col, concat_ws, conv, lit, pmod, substring, md5 => smd5}
     require(rowRateBp >= 0 && rowRateBp <= 10000 &&
       dirRateBp >= 0 && dirRateBp <= 10000,
       "rates are basis points in [0, 10000]")
-    val snap = snapshotId
-      .map(i => get(spark, tableDir, i).getOrElse(
-        sys.error(s"no snapshot snap-$i under $tableDir")))
-      .getOrElse(current(spark, tableDir).getOrElse(
-        sys.error(s"empty snapshot table $tableDir")))
+    val snap = resolve(spark, tableDir, snapshotId)
+    val sysDraw = (j: Int, _: String) => drawBp(s"$seed|sys|$j") < dirRateBp
     // SYSTEM-only tier (full row rate): the surviving dirs scan exactly
     // as read() does, so they take the GROUPED path (round-18) — a 1%
     // dir sample of a 10k-delta table plans O(runs), not O(100 dirs)
-    if (rowRateBp >= 10000) {
-      var ord = -1
-      val ordOf = snap.entries.zipWithIndex.map { case ((k, _), i) =>
-        if (k == DataEntry) { ord += 1; i -> ord } else i -> -1
-      }.toMap
-      val grouped = groupedMaskedFrames(spark, tableDir, snap,
-        (i, _) => drawBp(s"$seed|sys|${ordOf(i)}") < dirRateBp,
-        None, withPos = false)
-      return if (grouped.isEmpty) read(spark, tableDir, snapshotId).limit(0)
-      else grouped.reduce(_.unionByName(_, allowMissingColumns = true))
+    val perDir = if (rowRateBp >= 10000) None else Some {
+      (i: Int, j: Int, d: String) =>
+        val rowDraw = pmod(
+          conv(substring(smd5(concat_ws("|", lit(seed), lit("row"),
+            lit(j.toString), col("_pos").cast("string"))), 1, 12),
+            16, 10).cast("long"), lit(10000L)) < rowRateBp
+        val scan = maskedDirScan(spark, tableDir, snap, i, d,
+          Some(rowDraw), withPos = true)
+        scan.select(scan.columns.filterNot(Set("_dir", "_file", "_pos"))
+          .map(col).toIndexedSeq: _*)
     }
-    var dataOrd = -1
-    val frames = snap.entries.zipWithIndex.flatMap {
-      case ((DataEntry, d), i) =>
-        dataOrd += 1
-        val j = dataOrd
-        if (drawBp(s"$seed|sys|$j") >= dirRateBp) None
-        else {
-          val rowDraw =
-            if (rowRateBp >= 10000) None
-            else Some(pmod(
-              conv(substring(smd5(concat_ws("|", lit(seed), lit("row"),
-                lit(j.toString), col("_pos").cast("string"))), 1, 12),
-                16, 10).cast("long"), lit(10000L)) < rowRateBp)
-          // full row rate → the dir scans exactly as read() does (no
-          // address-column attach); only a binding row draw pays _pos
-          val scan = maskedDirScan(spark, tableDir, snap, i, d,
-            rowDraw, withPos = rowDraw.isDefined)
-          Some(if (rowDraw.isEmpty) scan
-            else scan.select(
-              scan.columns.filterNot(Set("_dir", "_file", "_pos"))
-                .map(col).toIndexedSeq: _*))
-        }
-      case _ => None
-    }
-    if (frames.isEmpty)
-      read(spark, tableDir, snapshotId).limit(0)
-    else frames.reduce(_.unionByName(_, allowMissingColumns = true))
-  }
-
-  /** [[readSampled]]'s SYSTEM-tier evidence: (opened, skipped) dir
-    * counts for a (seed, dirRateBp) draw — manifest-only, no data IO;
-    * the judged observable, as [[pruneCounts]] for s26. */
-  def sampleCounts(spark: SparkSession, tableDir: String,
-                   dirRateBp: Int, seed: String = "graft",
-                   snapshotId: Option[Long] = None): (Int, Int) = {
-    val snap = snapshotId
-      .map(i => get(spark, tableDir, i).getOrElse(
-        sys.error(s"no snapshot snap-$i under $tableDir")))
-      .getOrElse(current(spark, tableDir).getOrElse(
-        sys.error(s"empty snapshot table $tableDir")))
-    val n = snap.dataDirs.size
-    val opened = (0 until n)
-      .count(j => drawBp(s"$seed|sys|$j") < dirRateBp)
-    (opened, n - opened)
+    prunedScan(spark, tableDir, snap, sysDraw, None, perDir)
   }
 
   /** HIDDEN PARTITIONING (round-16, Iceberg's partition transforms):
@@ -2141,9 +2087,9 @@ object Snapshots {
     * [[commitAppendHidden]] lands each arriving batch as one data dir
     * PER TRANSFORM VALUE, recording the value as a synthetic
     * single-point stats line. Queries keep filtering on the RAW column
-    * ([[readHiddenRange]]/[[readHiddenPoint]] map the predicate to a
-    * value range and prune via the ordinary stats machinery) — the
-    * user never names, or even sees, a partition column, which is
+    * ([[Where.Hidden]] maps the predicate to a value range and prunes
+    * via the ordinary stats machinery) — the user never names, or even
+    * sees, a partition column, which is
     * exactly the Iceberg pitch: partitioning is table layout, not
     * query-author knowledge. At 100 TB a time-range scan of a
     * days-partitioned event log opens the matching day dirs only. */
@@ -2153,6 +2099,11 @@ object Snapshots {
       * so it can never collide with a real (non-`_`) data column */
     def statsName: String
     private[graft] def valueExpr: org.apache.spark.sql.Column
+    /** The closed range of values this transform gives the rows `on`
+      * matches — what [[Where.Hidden]] prunes by. */
+    private[graft] def valueRange(on: Where.On): (Long, Long)
+    protected def cannotPrune(on: Where.On): Nothing =
+      throw new IllegalArgumentException(s"$this cannot prune $on")
   }
   /** value = column div width: width 86400000000L buckets epoch micros
     * into days; width 1000 ranges a key space. Range predicates on the
@@ -2168,6 +2119,12 @@ object Snapshots {
     def statsName = s"__pt_trunc_${width}_$column"
     private[graft] def valueExpr =
       org.apache.spark.sql.functions.expr(s"`$column` div $width")
+    private[graft] def valueRange(on: Where.On) = on match {
+      case b: Where.Bounded =>
+        require(b.lo >= 0 && b.hi >= b.lo, "non-negative lo <= hi required")
+        (b.lo / width, b.hi / width)
+      case _ => cannotPrune(on)
+    }
   }
   /** value = pmod(column, n) — point lookups prune to one bucket (the
     * portable modulo bucket; a murmur bucket would not be replantable
@@ -2179,6 +2136,12 @@ object Snapshots {
     private[graft] def valueExpr = org.apache.spark.sql.functions.pmod(
       org.apache.spark.sql.functions.col(column),
       org.apache.spark.sql.functions.lit(n.toLong))
+    private[graft] def valueRange(on: Where.On) = on match {
+      case Where.Point(_, v) =>
+        val b = java.lang.Math.floorMod(v, n.toLong)
+        (b, b)
+      case _ => cannotPrune(on)
+    }
   }
   /** STRING truncate transform (round-18; Iceberg's truncate(col, L)
     * for the reference's own natural keys — `phs_accession`, doc ids,
@@ -2203,6 +2166,11 @@ object Snapshots {
       conv(hex(rpad(encode(col(column), "UTF-8"), len,
         Array[Byte](0))), 16, 10).cast("long")
     }
+    private[graft] def valueRange(on: Where.On) = on match {
+      case Where.StrRange(_, lo, hi) =>
+        (strTruncValue(lo, len), strTruncValue(hi, len))
+      case _ => cannotPrune(on)
+    }
   }
   /** STRING hash bucket (round-18): value = pmod over the md5-48-bit
     * integer digest — the replantable convention this engine's oracles
@@ -2219,6 +2187,12 @@ object Snapshots {
       import org.apache.spark.sql.functions.{col, conv, lit, md5, pmod, substring}
       pmod(conv(substring(md5(col(column)), 1, 12), 16, 10).cast("long"),
         lit(n.toLong))
+    }
+    private[graft] def valueRange(on: Where.On) = on match {
+      case Where.StrPoint(_, v) =>
+        val b = strBucketValue(v, n)
+        (b, b)
+      case _ => cannotPrune(on)
     }
   }
 
@@ -2260,8 +2234,8 @@ object Snapshots {
     * ranges prune the day axis, tenant/user lookups the bucket axis,
     * and a combined predicate prunes MULTIPLICATIVELY), each dir
     * carrying one synthetic stats line PER transform — which is all
-    * [[readHiddenAuto]]/[[readHiddenAutoMulti]] need: a dir opens only
-    * if EVERY recorded contract admits the predicate. Null values at
+    * [[Where.Dnf]] needs: a dir opens only if EVERY recorded contract
+    * admits the predicate. Null values at
     * any level leave that level's line unrecorded (never skipped on
     * that axis). */
   def commitAppendHidden(df: DataFrame, tableDir: String,
@@ -2316,102 +2290,6 @@ object Snapshots {
     won
   }
 
-  /** Range read through a truncate transform: rows with the SOURCE
-    * column in [lo, hi], opening only dirs whose partition value
-    * intersects [lo div w, hi div w]. Dirs without a recorded value
-    * (pre-transform commits, null-value rows) always open; deletes
-    * mask as everywhere. Non-negative ranges only (div truncation). */
-  def readHiddenRange(spark: SparkSession, tableDir: String,
-                      transform: TruncateTransform, lo: Long, hi: Long,
-                      snapshotId: Option[Long] = None): DataFrame = {
-    import org.apache.spark.sql.functions.col
-    require(lo >= 0 && hi >= lo, "non-negative lo <= hi required")
-    val snap = resolve(spark, tableDir, snapshotId)
-    statsPrunedRead(spark, tableDir, snap, transform.statsName,
-      lo / transform.width, hi / transform.width,
-      Some(col(transform.column).between(lo, hi)))
-  }
-
-  /** (opened, skipped) evidence for [[readHiddenRange]]. */
-  def hiddenRangeCounts(spark: SparkSession, tableDir: String,
-                        transform: TruncateTransform, lo: Long, hi: Long,
-                        snapshotId: Option[Long] = None): (Int, Int) = {
-    require(lo >= 0 && hi >= lo, "non-negative lo <= hi required")
-    statsPruneCounts(resolve(spark, tableDir, snapshotId),
-      transform.statsName, lo / transform.width, hi / transform.width)
-  }
-
-  /** Point lookup through a bucket transform: prune to the value's one
-    * bucket, then filter exactly. */
-  def readHiddenPoint(spark: SparkSession, tableDir: String,
-                      transform: BucketTransform, value: Long,
-                      snapshotId: Option[Long] = None): DataFrame = {
-    import org.apache.spark.sql.functions.col
-    val b = java.lang.Math.floorMod(value, transform.n.toLong)
-    val snap = resolve(spark, tableDir, snapshotId)
-    statsPrunedRead(spark, tableDir, snap, transform.statsName, b, b,
-      Some(col(transform.column) === value))
-  }
-
-  /** (opened, skipped) evidence for [[readHiddenPoint]]. */
-  def hiddenPointCounts(spark: SparkSession, tableDir: String,
-                        transform: BucketTransform, value: Long,
-                        snapshotId: Option[Long] = None): (Int, Int) = {
-    val b = java.lang.Math.floorMod(value, transform.n.toLong)
-    statsPruneCounts(resolve(spark, tableDir, snapshotId),
-      transform.statsName, b, b)
-  }
-
-  /** [[readHiddenRange]] for STRING-keyed hidden partitioning
-    * (round-18): rows with `column` BETWEEN lo AND hi, opening only
-    * dirs whose packed-prefix partition value intersects
-    * [pack(lo), pack(hi)] — sound because byte-prefix truncation is
-    * monotone (see [[TruncateStrTransform]]). */
-  def readHiddenRangeStr(spark: SparkSession, tableDir: String,
-                         transform: TruncateStrTransform,
-                         lo: String, hi: String,
-                         snapshotId: Option[Long] = None): DataFrame = {
-    import org.apache.spark.sql.functions.col
-    require(lo <= hi, s"need lo <= hi, got '$lo' > '$hi'")
-    val snap = resolve(spark, tableDir, snapshotId)
-    statsPrunedRead(spark, tableDir, snap, transform.statsName,
-      strTruncValue(lo, transform.len), strTruncValue(hi, transform.len),
-      Some(col(transform.column).between(lo, hi)))
-  }
-
-  /** (opened, skipped) evidence for [[readHiddenRangeStr]]. */
-  def hiddenRangeStrCounts(spark: SparkSession, tableDir: String,
-                           transform: TruncateStrTransform,
-                           lo: String, hi: String,
-                           snapshotId: Option[Long] = None): (Int, Int) = {
-    require(lo <= hi, s"need lo <= hi, got '$lo' > '$hi'")
-    statsPruneCounts(resolve(spark, tableDir, snapshotId),
-      transform.statsName,
-      strTruncValue(lo, transform.len), strTruncValue(hi, transform.len))
-  }
-
-  /** Point lookup through a STRING hash bucket (round-18): prune to
-    * the value's one bucket per the md5-48 convention, then filter
-    * exactly. */
-  def readHiddenPointStr(spark: SparkSession, tableDir: String,
-                         transform: BucketStrTransform, value: String,
-                         snapshotId: Option[Long] = None): DataFrame = {
-    import org.apache.spark.sql.functions.col
-    val b = strBucketValue(value, transform.n)
-    val snap = resolve(spark, tableDir, snapshotId)
-    statsPrunedRead(spark, tableDir, snap, transform.statsName, b, b,
-      Some(col(transform.column) === value))
-  }
-
-  /** (opened, skipped) evidence for [[readHiddenPointStr]]. */
-  def hiddenPointStrCounts(spark: SparkSession, tableDir: String,
-                           transform: BucketStrTransform, value: String,
-                           snapshotId: Option[Long] = None): (Int, Int) = {
-    val b = strBucketValue(value, transform.n)
-    statsPruneCounts(resolve(spark, tableDir, snapshotId),
-      transform.statsName, b, b)
-  }
-
   /** PARTITION-SPEC EVOLUTION (round-17, Iceberg's per-spec pruning):
     * whether dir `d` can hold a row with `column` in [lo, hi], judged
     * under EVERY pruning contract the dir carries for that column —
@@ -2449,148 +2327,6 @@ object Snapshots {
     }
     !excluded
   }
-
-  /** Spec-evolution-aware range read: rows with `column` in [lo, hi],
-    * each dir pruned under its own generation's contract (see
-    * [[hiddenAdmits]]). This is what a reader uses on a table whose
-    * partition layout changed over its life — at 100 TB the old days
-    * and the new weeks each prune correctly with no rewrite. */
-  def readHiddenAuto(spark: SparkSession, tableDir: String,
-                     column: String, lo: Long, hi: Long,
-                     snapshotId: Option[Long] = None): DataFrame = {
-    import org.apache.spark.sql.functions.col
-    val snap = resolve(spark, tableDir, snapshotId)
-    val frames = groupedMaskedFrames(spark, tableDir, snap,
-      (_, d) => hiddenAdmits(snap, d, column, lo, hi),
-      Some(col(column).between(lo, hi)), withPos = false)
-    if (frames.isEmpty) {
-      val empty = read(spark, tableDir, Some(snap.id)).limit(0)
-      empty.filter(col(column).between(lo, hi))
-    } else frames.reduce(_.unionByName(_, allowMissingColumns = true))
-  }
-
-  /** (opened, skipped) evidence for [[readHiddenAuto]]. */
-  def hiddenAutoCounts(spark: SparkSession, tableDir: String,
-                       column: String, lo: Long, hi: Long,
-                       snapshotId: Option[Long] = None): (Int, Int) = {
-    val snap = resolve(spark, tableDir, snapshotId)
-    val dirs = snap.dataDirs
-    val opened = dirs.count(d => hiddenAdmits(snap, d, column, lo, hi))
-    (opened, dirs.size - opened)
-  }
-
-  /** [[readHiddenAuto]]'s point form — `column = value` across every
-    * spec generation (a bucket(8) dir opens only for the value's
-    * residue mod 8, a bucket(16) dir mod 16). */
-  def readHiddenPointAuto(spark: SparkSession, tableDir: String,
-                          column: String, value: Long,
-                          snapshotId: Option[Long] = None): DataFrame = {
-    import org.apache.spark.sql.functions.col
-    val snap = resolve(spark, tableDir, snapshotId)
-    val frames = groupedMaskedFrames(spark, tableDir, snap,
-      (_, d) => hiddenAdmits(snap, d, column, value, value),
-      Some(col(column) === value), withPos = false)
-    if (frames.isEmpty)
-      read(spark, tableDir, Some(snap.id)).limit(0)
-        .filter(col(column) === value)
-    else frames.reduce(_.unionByName(_, allowMissingColumns = true))
-  }
-
-  /** (opened, skipped) evidence for [[readHiddenPointAuto]]. */
-  def hiddenPointAutoCounts(spark: SparkSession, tableDir: String,
-                            column: String, value: Long,
-                            snapshotId: Option[Long] = None): (Int, Int) =
-    hiddenAutoCounts(spark, tableDir, column, value, value, snapshotId)
-
-  /** CONJUNCTIVE spec-aware read over SEVERAL columns — the payoff of
-    * multi-dimensional hidden partitioning: on a day × bucket event
-    * table a (time window AND user) predicate opens only dirs
-    * admitted on EVERY axis, pruning multiplicatively. `preds` are
-    * (column, lo, hi) ranges (point = lo == hi). */
-  def readHiddenAutoMulti(spark: SparkSession, tableDir: String,
-                          preds: Seq[(String, Long, Long)],
-                          snapshotId: Option[Long] = None): DataFrame = {
-    import org.apache.spark.sql.functions.col
-    require(preds.nonEmpty, "at least one predicate")
-    val snap = resolve(spark, tableDir, snapshotId)
-    def admitsAll(d: String) =
-      preds.forall(p => hiddenAdmits(snap, d, p._1, p._2, p._3))
-    val filter = preds.map(p => col(p._1).between(p._2, p._3))
-      .reduce(_ && _)
-    val frames = groupedMaskedFrames(spark, tableDir, snap,
-      (_, d) => admitsAll(d), Some(filter), withPos = false)
-    if (frames.isEmpty)
-      read(spark, tableDir, Some(snap.id)).limit(0).filter(filter)
-    else frames.reduce(_.unionByName(_, allowMissingColumns = true))
-  }
-
-  /** (opened, skipped) evidence for [[readHiddenAutoMulti]]. */
-  def hiddenAutoMultiCounts(spark: SparkSession, tableDir: String,
-                            preds: Seq[(String, Long, Long)],
-                            snapshotId: Option[Long] = None): (Int, Int) = {
-    val snap = resolve(spark, tableDir, snapshotId)
-    val dirs = snap.dataDirs
-    val opened = dirs.count(d =>
-      preds.forall(p => hiddenAdmits(snap, d, p._1, p._2, p._3)))
-    (opened, dirs.size - opened)
-  }
-
-  /** DISJUNCTIVE spec-aware read (round-18; the r17 VERDICT's #5):
-    * `disjuncts` is a predicate in disjunctive normal form — an OR
-    * over conjunctions of (column, lo, hi) ranges (point = lo == hi).
-    * A dir opens when ANY disjunct admits it (each conjunct judged
-    * under every spec generation, as [[hiddenAdmits]]); the residual
-    * filter is the OR of the conjunctions, so the result is exactly
-    * `read().filter(<DNF>)`. IN-lists and OR predicates are routine on
-    * tenant dashboards — without this they fell back to
-    * open-everything. */
-  def readHiddenAutoDisj(spark: SparkSession, tableDir: String,
-                         disjuncts: Seq[Seq[(String, Long, Long)]],
-                         snapshotId: Option[Long] = None): DataFrame = {
-    import org.apache.spark.sql.functions.col
-    require(disjuncts.nonEmpty && disjuncts.forall(_.nonEmpty),
-      "at least one disjunct, each with at least one range")
-    val snap = resolve(spark, tableDir, snapshotId)
-    def admits(d: String) = disjuncts.exists(conj =>
-      conj.forall(p => hiddenAdmits(snap, d, p._1, p._2, p._3)))
-    val filter = disjuncts.map(conj =>
-      conj.map(p => col(p._1).between(p._2, p._3)).reduce(_ && _))
-      .reduce(_ || _)
-    val frames = groupedMaskedFrames(spark, tableDir, snap,
-      (_, d) => admits(d), Some(filter), withPos = false)
-    if (frames.isEmpty)
-      read(spark, tableDir, Some(snap.id)).limit(0).filter(filter)
-    else frames.reduce(_.unionByName(_, allowMissingColumns = true))
-  }
-
-  /** (opened, skipped) evidence for [[readHiddenAutoDisj]]. */
-  def hiddenAutoDisjCounts(spark: SparkSession, tableDir: String,
-                           disjuncts: Seq[Seq[(String, Long, Long)]],
-                           snapshotId: Option[Long] = None): (Int, Int) = {
-    require(disjuncts.nonEmpty && disjuncts.forall(_.nonEmpty),
-      "at least one disjunct, each with at least one range")
-    val snap = resolve(spark, tableDir, snapshotId)
-    val dirs = snap.dataDirs
-    val opened = dirs.count(d => disjuncts.exists(conj =>
-      conj.forall(p => hiddenAdmits(snap, d, p._1, p._2, p._3))))
-    (opened, dirs.size - opened)
-  }
-
-  /** IN-list read: `column IN (values)` as the point-disjunct special
-    * case of [[readHiddenAutoDisj]] — on a bucketed table each value
-    * opens its one residue dir per spec generation. */
-  def readHiddenAutoIn(spark: SparkSession, tableDir: String,
-                       column: String, values: Seq[Long],
-                       snapshotId: Option[Long] = None): DataFrame =
-    readHiddenAutoDisj(spark, tableDir,
-      values.distinct.map(v => Seq((column, v, v))), snapshotId)
-
-  /** (opened, skipped) evidence for [[readHiddenAutoIn]]. */
-  def hiddenAutoInCounts(spark: SparkSession, tableDir: String,
-                         column: String, values: Seq[Long],
-                         snapshotId: Option[Long] = None): (Int, Int) =
-    hiddenAutoDisjCounts(spark, tableDir,
-      values.distinct.map(v => Seq((column, v, v))), snapshotId)
 
   private def branchPtr(name: String) = s"_BRANCH_$name"
 

@@ -5,6 +5,7 @@ import org.apache.spark.sql.execution.SparkPlan
 import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
 import org.apache.spark.sql.execution.exchange.{BroadcastExchangeLike, ShuffleExchangeLike}
 import org.apache.spark.sql.execution.window.WindowExec
+import graft.ops.Snapshots.Where
 
 /** Pin the EXECUTED plan shapes of the headline queries so a plan
   * regression (lost broadcast, extra shuffle, a window sneaking back into
@@ -720,7 +721,8 @@ class PlanShapeSpec extends SparkSpec {
     val t10 = Snapshots.TruncateTransform("v", 10000L)
     Snapshots.commitAppendHidden(
       (1L to 3000L).map(i => (i, i * 10)).toDF("k", "v"), hroot, t10)
-    val p2 = finalPlan(Snapshots.readHiddenRange(spark, hroot, t10, 0L, 9999L))
+    val p2 = finalPlan(Snapshots.scan(spark, hroot,
+      Where.Hidden(t10, Where.Range("v", 0L, 9999L))).frame)
     val scans2 = deep(p2).collect {
       case f: org.apache.spark.sql.execution.FileSourceScanExec => f }
     assert(scans2.nonEmpty && scans2.forall(_.dataFilters.nonEmpty),
@@ -737,8 +739,8 @@ class PlanShapeSpec extends SparkSpec {
     Snapshots.commitAppendStats(
       (1L to 2000L).map(i => (f"K$i%08d", i)).toDF("id", "v"), root,
       Seq("id"), None)
-    val p1 = finalPlan(
-      Snapshots.readPrunedStr(spark, root, "id", "K00000010", "K00000020"))
+    val p1 = finalPlan(Snapshots.scan(spark, root,
+      Where.StrRange("id", "K00000010", "K00000020")).frame)
     val scans1 = deep(p1).collect {
       case f: org.apache.spark.sql.execution.FileSourceScanExec => f }
     assert(scans1.nonEmpty && scans1.forall(_.dataFilters.nonEmpty),
@@ -751,14 +753,15 @@ class PlanShapeSpec extends SparkSpec {
       (1L to 3000L).map(i => (i, i * 10, i % 50)).toDF("k", "t", "u"),
       hroot, Seq(Snapshots.TruncateTransform("t", 10000L),
         Snapshots.BucketTransform("u", 4)), None)
-    val p2 = finalPlan(Snapshots.readHiddenAutoMulti(spark, hroot,
-      Seq(("t", 0L, 9999L), ("u", 2L, 2L))))
+    val p2 = finalPlan(Snapshots.scan(spark, hroot,
+      Where.Dnf.all(Where.Range("t", 0L, 9999L), Where.Range("u", 2L, 2L))).frame)
     val scans2 = deep(p2).collect {
       case f: org.apache.spark.sql.execution.FileSourceScanExec => f }
     assert(scans2.nonEmpty && scans2.forall(_.dataFilters.nonEmpty),
       s"both raw predicates must push into the opened dirs' scans:\n$p2")
     assert(shuffles(p2).isEmpty, s"conjunctive auto read is scan-only:\n$p2")
-    val p3 = finalPlan(Snapshots.readHiddenAuto(spark, hroot, "t", 0L, 9999L))
+    val p3 = finalPlan(Snapshots.scan(spark, hroot,
+      Where.Dnf.all(Where.Range("t", 0L, 9999L))).frame)
     assert(shuffles(p3).isEmpty, s"spec-aware read is scan-only:\n$p3")
   }
 

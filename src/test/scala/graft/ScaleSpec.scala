@@ -4,12 +4,16 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
 import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
 import graft.ops.Scale
+import graft.ops.Snapshots.{Scan, Where}
 
 /** Plan-level assertions for the scale mechanics: salting preserves join
   * results while spreading hot keys; bucketed tables join shuffle-free. */
 class ScaleSpec extends SparkSpec {
 
   import spark.implicits._
+
+  /** (opened, skipped) of a pruned scan */
+  private def counts(sc: Scan): (Int, Int) = (sc.opened, sc.skipped)
 
   test("saltedJoin returns exactly the unsalted join result") {
     // skewed: key 1 carries most rows
@@ -594,14 +598,16 @@ class ScaleSpec extends SparkSpec {
     assert(Snapshots.current(spark, root).get.stats.size == 2,
       "stats lines must ride every child manifest")
     def pruned(lo: Long, hi: Long) =
-      Snapshots.readPruned(spark, root, "k", lo, hi)
+      Snapshots.scan(spark, root, Where.Range("k", lo, hi)).frame
         .as[(Long, String)].collect().toSet
     // skip the [10,20] dir entirely; the stats-less dir is still read
-    assert(Snapshots.pruneCounts(spark, root, "k", 1L, 6L) == ((2, 1)))
+    assert(counts(Snapshots.scan(spark, root,
+      Where.Range("k", 1L, 6L))) == ((2, 1)))
     assert(pruned(1L, 6L) == Set((1L, "a"), (3L, "e"))) // 5 deleted
     // disjoint-everything predicate: zero dirs with stats match, the
     // stats-less dir filters to nothing — empty frame, correct schema
-    assert(Snapshots.readPruned(spark, root, "k", 100L, 200L).count() == 0L)
+    assert(Snapshots.scan(spark, root,
+      Where.Range("k", 100L, 200L)).frame.count() == 0L)
     // pruned == full filtered read for every window (the semantics gate)
     for ((lo, hi) <- Seq((1L, 6L), (4L, 12L), (1L, 50L), (15L, 25L))) {
       val full = Snapshots.read(spark, root)
@@ -616,10 +622,13 @@ class ScaleSpec extends SparkSpec {
       s"rewrite must re-derive stats on the rewritten dir: $postRw")
     // surviving rows are k in {1,3,10,20} -> the one dir spans [1,20]:
     // an in-range read opens it, a disjoint range skips the whole table
-    assert(Snapshots.pruneCounts(spark, root, "k", 1L, 6L) == ((1, 0)))
+    assert(counts(Snapshots.scan(spark, root,
+      Where.Range("k", 1L, 6L))) == ((1, 0)))
     assert(pruned(1L, 6L) == Set((1L, "a"), (3L, "e")))
-    assert(Snapshots.pruneCounts(spark, root, "k", 100L, 200L) == ((0, 1)))
-    assert(Snapshots.readPruned(spark, root, "k", 100L, 200L).count() == 0L)
+    assert(counts(Snapshots.scan(spark, root,
+      Where.Range("k", 100L, 200L))) == ((0, 1)))
+    assert(Snapshots.scan(spark, root,
+      Where.Range("k", 100L, 200L)).frame.count() == 0L)
   }
 
   test("snapshots: stats survive MERGE commits and mixed-column tables stay readable (round-16)") {
@@ -633,8 +642,10 @@ class ScaleSpec extends SparkSpec {
     Snapshots.commitAppendStats(
       Seq((10L, 1000L, "c"), (20L, 2000L, "d")).toDF("k", "ts", "v"),
       root, Seq("k", "ts"), None)
-    assert(Snapshots.pruneCounts(spark, root, "k", 1L, 6L) == ((1, 1)))
-    assert(Snapshots.pruneCounts(spark, root, "ts", 1500L, 3000L) == ((1, 1)))
+    assert(counts(Snapshots.scan(spark, root,
+      Where.Range("k", 1L, 6L))) == ((1, 1)))
+    assert(counts(Snapshots.scan(spark, root,
+      Where.Range("ts", 1500L, 3000L))) == ((1, 1)))
     // MERGE maintains the established stats columns on its payload dir:
     // replace k=5, insert k=30 -> payload dir spans k [5,30], ts [550,3000]
     Snapshots.commitMerge(
@@ -644,18 +655,20 @@ class ScaleSpec extends SparkSpec {
     assert(st.size == 3 && st.values.forall(m => m.contains("k") && m.contains("ts")),
       s"merge payload dir must carry stats on every established column: $st")
     // the merged dir spans [5,30]: a low-range probe skips it AND dir 2
-    assert(Snapshots.pruneCounts(spark, root, "k", 1L, 4L) == ((1, 2)))
+    assert(counts(Snapshots.scan(spark, root,
+      Where.Range("k", 1L, 4L))) == ((1, 2)))
     // pruned == filtered on the merged state, for both stats columns
     for ((c, lo, hi) <- Seq(("k", 1L, 6L), ("k", 25L, 40L), ("ts", 1L, 600L))) {
       val full = Snapshots.read(spark, root)
         .filter(col(c).between(lo, hi)).as[(Long, Long, String)].collect().toSet
-      val prn = Snapshots.readPruned(spark, root, c, lo, hi)
+      val prn = Snapshots.scan(spark, root, Where.Range(c, lo, hi)).frame
         .as[(Long, Long, String)].collect().toSet
       assert(prn == full, s"pruned != filtered for $c [$lo,$hi]")
     }
     // a column NO dir has stats on: never skipped, never an error (the
     // round-15 behavior threw on mismatched stats columns)
-    assert(Snapshots.pruneCounts(spark, root, "v", 1L, 2L) == ((3, 0)))
+    assert(counts(Snapshots.scan(spark, root,
+      Where.Range("v", 1L, 2L))) == ((3, 0)))
     // all-null stats column under the STRICT append contract: loud, and
     // the just-written dir is cleaned up (no orphan for vacuum)
     intercept[RuntimeException] {
@@ -695,8 +708,8 @@ class ScaleSpec extends SparkSpec {
     // equality deletes COMPOSE: delete k=3 by key; both masks apply
     Snapshots.commitDelete(Seq(Tuple1(3L)).toDF("k"), root, "k")
     assert(ks() == Set(1L, 5L, 8L))
-    // readPruned masks position deletes too (2 and 4 in range, masked)
-    assert(Snapshots.readPruned(spark, root, "k", 1L, 4L)
+    // a Range scan masks position deletes too (2 and 4 in range, masked)
+    assert(Snapshots.scan(spark, root, Where.Range("k", 1L, 4L)).frame
       .as[(Long, String)].collect().map(_._1).toSet == Set(1L))
     // changesBetween across a pos-delete interval: exact-diff fallback
     val ch = Snapshots.changesBetween(spark, root, id2, id3)
@@ -923,8 +936,10 @@ class ScaleSpec extends SparkSpec {
     assert(cur.dataDirs.size == 4,
       s"per-value dirs must survive the rewrite, got ${cur.dataDirs}")
     // pruning still works: [0,9] opens value-0 + the null dir only
-    assert(Snapshots.hiddenRangeCounts(spark, root, t10, 0L, 9L) == ((2, 2)))
-    assert(Snapshots.readHiddenRange(spark, root, t10, 0L, 9L)
+    assert(counts(Snapshots.scan(spark, root,
+      Where.Hidden(t10, Where.Range("v", 0L, 9L)))) == ((2, 2)))
+    assert(Snapshots.scan(spark, root,
+      Where.Hidden(t10, Where.Range("v", 0L, 9L))).frame
       .select("k").as[Long].collect().toSet == Set(1L))
     assert(Snapshots.read(spark, root).select("k").as[Long]
       .collect().toSet == Set(1L, 2L, 3L, 5L), "rewrite lossless")
@@ -940,8 +955,10 @@ class ScaleSpec extends SparkSpec {
     assert(cur2.dataDirs.forall(d => cur2.stats.get(d).forall(m =>
       m.keys.forall(!_.startsWith("__pt_trunc_10_")))),
       "old-spec synthetic stats must not survive the converging rewrite")
-    assert(Snapshots.hiddenRangeCounts(spark, root, t100, 100L, 199L) == ((2, 2)))
-    assert(Snapshots.readHiddenRange(spark, root, t100, 100L, 199L)
+    assert(counts(Snapshots.scan(spark, root,
+      Where.Hidden(t100, Where.Range("v", 100L, 199L)))) == ((2, 2)))
+    assert(Snapshots.scan(spark, root,
+      Where.Hidden(t100, Where.Range("v", 100L, 199L))).frame
       .select("k").as[Long].collect().toSet == Set(6L))
     // 3) clustered rewrite of a plain table: explicit parts → that many
     // range-disjoint dirs, stats on the sort key, point probe opens 1
@@ -962,9 +979,11 @@ class ScaleSpec extends SparkSpec {
       case _ => true
     }, s"clustered dirs must be range-disjoint: $ranges")
     // a point probe opens exactly one dir (range stats + rebuilt bloom)
-    assert(Snapshots.pruneCounts(spark, root2, "k", 42L, 42L) == ((1, 3)))
-    assert(Snapshots.pointCounts(spark, root2, "k", 42L) == ((1, 3)))
-    assert(Snapshots.readPoint(spark, root2, "k", 42L)
+    assert(counts(Snapshots.scan(spark, root2,
+      Where.Range("k", 42L, 42L))) == ((1, 3)))
+    assert(counts(Snapshots.scan(spark, root2,
+      Where.Point("k", 42L))) == ((1, 3)))
+    assert(Snapshots.scan(spark, root2, Where.Point("k", 42L)).frame
       .select("v").as[String].collect().toSeq == Seq("v42"))
     // lossless: full read equals the undeleted key set
     assert(Snapshots.read(spark, root2).select("k").as[Long].collect().toSet
@@ -990,15 +1009,18 @@ class ScaleSpec extends SparkSpec {
       Seq(("xigua", 5L), ("yuzu", 6L)).toDF("id", "v"), root,
       Seq("id"), None)
     Snapshots.commitAppend(Seq(("kiwi", 7L)).toDF("id", "v"), root)
-    assert(Snapshots.pruneCountsStr(spark, root, "id", "a", "az") == ((2, 2)))
-    assert(Snapshots.readPrunedStr(spark, root, "id", "a", "az")
+    assert(counts(Snapshots.scan(spark, root,
+      Where.StrRange("id", "a", "az"))) == ((2, 2)))
+    assert(Snapshots.scan(spark, root, Where.StrRange("id", "a", "az")).frame
       .select("id").as[String].collect().toSet == Set("apple", "avocado"))
     // out-of-range probe: only the stats-less dir opens, zero rows
-    assert(Snapshots.pruneCountsStr(spark, root, "id", "zz", "zzz") == ((1, 3)))
-    assert(Snapshots.readPrunedStr(spark, root, "id", "zz", "zzz").count() == 0)
+    assert(counts(Snapshots.scan(spark, root,
+      Where.StrRange("id", "zz", "zzz"))) == ((1, 3)))
+    assert(Snapshots.scan(spark, root,
+      Where.StrRange("id", "zz", "zzz")).frame.count() == 0)
     // deletes compose (string delete key), and a rename REMAPS bounds
     Snapshots.commitDelete(Seq(Tuple1("melon")).toDF("id"), root, "id")
-    assert(Snapshots.readPrunedStr(spark, root, "id", "m", "n")
+    assert(Snapshots.scan(spark, root, Where.StrRange("id", "m", "n")).frame
       .select("id").as[String].collect().toSeq == Seq("mango"))
     // TRUNCATION soundness: >16-byte keys sharing a 16-byte prefix must
     // never be skipped by a probe inside the shared-prefix range — the
@@ -1009,18 +1031,22 @@ class ScaleSpec extends SparkSpec {
     Snapshots.commitAppendStats(
       Seq((longA, 1L), (longB, 2L)).toDF("id", "v"), root2, Seq("id"), None)
     // probe equal to a full key (longer than the truncated bound): must open
-    assert(Snapshots.pruneCountsStr(spark, root2, "id", longA, longA) == ((1, 0)))
-    assert(Snapshots.readPrunedStr(spark, root2, "id", longA, longA)
+    assert(counts(Snapshots.scan(spark, root2,
+      Where.StrRange("id", longA, longA))) == ((1, 0)))
+    assert(Snapshots.scan(spark, root2,
+      Where.StrRange("id", longA, longA)).frame
       .count() == 1)
     // probe past the shared prefix: rightly skipped
-    assert(Snapshots.pruneCountsStr(spark, root2, "id", "Q", "R") == ((0, 1)))
+    assert(counts(Snapshots.scan(spark, root2,
+      Where.StrRange("id", "Q", "R"))) == ((0, 1)))
     // empty-string and non-ASCII values round the manifest safely
     val root3 = java.nio.file.Files.createTempDirectory("snapstr3").toString
     Snapshots.commitAppendStats(
       Seq(("", 1L), ("ééééééééééé", 2L)).toDF("id", "v"), root3,
       Seq("id"), None) // 11 é = 22 UTF-8 bytes > 16: truncated upper
-    assert(Snapshots.pruneCountsStr(spark, root3, "id", "", "zz") == ((1, 0)))
-    assert(Snapshots.readPrunedStr(spark, root3, "id", "é", "éż")
+    assert(counts(Snapshots.scan(spark, root3,
+      Where.StrRange("id", "", "zz"))) == ((1, 0)))
+    assert(Snapshots.scan(spark, root3, Where.StrRange("id", "é", "éż")).frame
       .select("v").as[Long].collect().toSeq == Seq(2L))
     // bloom point lookups on a string key; merge keeps sstats on its
     // payload dir; clustered rewrite on a STRING sort key re-records
@@ -1033,10 +1059,12 @@ class ScaleSpec extends SparkSpec {
         bloomCol = "id", statsCols = Seq("id"))
     // ranges of the three mod-class dirs overlap fully: only the bloom
     // can skip, and it does for an absent key
-    assert(Snapshots.pointCountsStr(spark, root4, "id", "DOC-9999") == ((0, 3)))
-    val hit = Snapshots.pointCountsStr(spark, root4, "id", "DOC-0042")
+    assert(counts(Snapshots.scan(spark, root4,
+      Where.StrPoint("id", "DOC-9999"))) == ((0, 3)))
+    val hit = counts(Snapshots.scan(spark, root4,
+      Where.StrPoint("id", "DOC-0042")))
     assert(hit._1 >= 1 && hit._1 <= 2, s"bloom fp budget: $hit")
-    assert(Snapshots.readPointStr(spark, root4, "id", "DOC-0042")
+    assert(Snapshots.scan(spark, root4, Where.StrPoint("id", "DOC-0042")).frame
       .select("v").as[Long].collect().toSeq == Seq(42L))
     Snapshots.commitMerge(
       Seq(("DOC-0042", 420L), ("DOC-0061", 61L)).toDF("id", "v"),
@@ -1049,13 +1077,15 @@ class ScaleSpec extends SparkSpec {
     assert(cr.dataDirs.size == 3 &&
       cr.dataDirs.forall(d => cr.sstats.get(d).exists(_.contains("id"))),
       "clustered string rewrite must record per-dir bounds")
-    assert(Snapshots.pruneCountsStr(spark, root4, "id", "DOC-0001", "DOC-0005")
+    assert(counts(Snapshots.scan(spark, root4,
+      Where.StrRange("id", "DOC-0001", "DOC-0005")))
       ._2 == 2, "post-rewrite string pruning must skip the other dirs")
-    assert(Snapshots.readPointStr(spark, root4, "id", "DOC-0042")
+    assert(Snapshots.scan(spark, root4, Where.StrPoint("id", "DOC-0042")).frame
       .select("v").as[Long].collect().toSeq == Seq(420L))
     // rename remaps string bounds to the new logical name
     Snapshots.commitRenameColumn(spark, root, "v", "val")
-    assert(Snapshots.pruneCountsStr(spark, root, "id", "a", "az") == ((2, 2)))
+    assert(counts(Snapshots.scan(spark, root,
+      Where.StrRange("id", "a", "az"))) == ((2, 2)))
   }
 
   test("snapshots: partition-spec evolution — each dir generation prunes under its own spec (round-17)") {
@@ -1074,23 +1104,31 @@ class ScaleSpec extends SparkSpec {
     val cur = Snapshots.current(spark, root).get
     assert(cur.dataDirs.size == 12, s"4 + 8 occupied buckets: ${cur.dataDirs}")
     // k=30: residue 2 mod 4 and 6 mod 8 — one dir per generation
-    assert(Snapshots.hiddenPointAutoCounts(spark, root, "k", 30L) == ((2, 10)))
-    assert(Snapshots.readHiddenPointAuto(spark, root, "k", 30L)
+    assert(counts(Snapshots.scan(spark, root,
+      Where.Dnf.all(Where.Point("k", 30L)))) == ((2, 10)))
+    assert(Snapshots.scan(spark, root,
+      Where.Dnf.all(Where.Point("k", 30L))).frame
       .select("v").as[String].collect().toSeq == Seq("b30"))
     // k=7 lives in generation 1 only; its gen-2 residue dir still opens
     // (pruning is per-dir contract, not content knowledge)
-    assert(Snapshots.hiddenPointAutoCounts(spark, root, "k", 7L) == ((2, 10)))
-    assert(Snapshots.readHiddenPointAuto(spark, root, "k", 7L)
+    assert(counts(Snapshots.scan(spark, root,
+      Where.Dnf.all(Where.Point("k", 7L)))) == ((2, 10)))
+    assert(Snapshots.scan(spark, root,
+      Where.Dnf.all(Where.Point("k", 7L))).frame
       .select("v").as[String].collect().toSeq == Seq("a7"))
     // a range spanning >= 8 consecutive values admits every bucket
-    assert(Snapshots.hiddenAutoCounts(spark, root, "k", 1L, 40L) == ((12, 0)))
+    assert(counts(Snapshots.scan(spark, root,
+      Where.Dnf.all(Where.Range("k", 1L, 40L)))) == ((12, 0)))
     // a 2-value range admits 2 residues per generation
-    assert(Snapshots.hiddenAutoCounts(spark, root, "k", 9L, 10L) == ((4, 8)))
-    assert(Snapshots.readHiddenAuto(spark, root, "k", 9L, 10L)
+    assert(counts(Snapshots.scan(spark, root,
+      Where.Dnf.all(Where.Range("k", 9L, 10L)))) == ((4, 8)))
+    assert(Snapshots.scan(spark, root,
+      Where.Dnf.all(Where.Range("k", 9L, 10L))).frame
       .select("k").as[Long].collect().toSet == Set(9L, 10L))
     // deletes mask across generations as everywhere
     Snapshots.commitDelete(Seq(Tuple1(30L)).toDF("k"), root, "k")
-    assert(Snapshots.readHiddenPointAuto(spark, root, "k", 30L).count() == 0)
+    assert(Snapshots.scan(spark, root,
+      Where.Dnf.all(Where.Point("k", 30L))).frame.count() == 0)
     // truncate evolution: day-width then week-width generations; a
     // range probe opens matching days + matching weeks
     val root2 = java.nio.file.Files.createTempDirectory("snapspec2").toString
@@ -1101,20 +1139,26 @@ class ScaleSpec extends SparkSpec {
       Seq((4L, 35L), (5L, 95L)).toDF("k", "t"), root2,
       TruncateTransform("t", 50L))
     // [0,9]: day-dir value 0 opens; week dirs 0 (t=35) opens, 1 (t=95) skips
-    assert(Snapshots.hiddenAutoCounts(spark, root2, "t", 0L, 9L) == ((2, 3)))
-    assert(Snapshots.readHiddenAuto(spark, root2, "t", 0L, 9L)
+    assert(counts(Snapshots.scan(spark, root2,
+      Where.Dnf.all(Where.Range("t", 0L, 9L)))) == ((2, 3)))
+    assert(Snapshots.scan(spark, root2,
+      Where.Dnf.all(Where.Range("t", 0L, 9L))).frame
       .select("k").as[Long].collect().toSet == Set(1L))
     // [90,99]: only week dir 1
-    assert(Snapshots.hiddenAutoCounts(spark, root2, "t", 90L, 99L) == ((1, 4)))
-    assert(Snapshots.readHiddenAuto(spark, root2, "t", 90L, 99L)
+    assert(counts(Snapshots.scan(spark, root2,
+      Where.Dnf.all(Where.Range("t", 90L, 99L)))) == ((1, 4)))
+    assert(Snapshots.scan(spark, root2,
+      Where.Dnf.all(Where.Range("t", 90L, 99L))).frame
       .select("k").as[Long].collect().toSet == Set(5L))
     // OPTIMIZE converges the mixed history to the newest spec and the
     // auto reads keep pruning (composition with s37)
     Snapshots.commitRewrite(spark, root2)
     val c2 = Snapshots.current(spark, root2).get
     assert(c2.dataDirs.size == 2, s"weeks 0 and 1: ${c2.dataDirs}")
-    assert(Snapshots.hiddenAutoCounts(spark, root2, "t", 90L, 99L) == ((1, 1)))
-    assert(Snapshots.readHiddenAuto(spark, root2, "t", 0L, 29L)
+    assert(counts(Snapshots.scan(spark, root2,
+      Where.Dnf.all(Where.Range("t", 90L, 99L)))) == ((1, 1)))
+    assert(Snapshots.scan(spark, root2,
+      Where.Dnf.all(Where.Range("t", 0L, 29L))).frame
       .select("k").as[Long].collect().toSet == Set(1L, 2L, 3L))
   }
 
@@ -1187,15 +1231,16 @@ class ScaleSpec extends SparkSpec {
     val cur = Snapshots.current(spark, root).get
     assert(cur.dataDirs.size == 5, s"one dir per tuple + null: ${cur.dataDirs}")
     // each axis prunes independently...
-    assert(Snapshots.hiddenAutoCounts(spark, root, "t", 0L, 9L) == ((3, 2)))
-    assert(Snapshots.hiddenAutoCounts(spark, root, "u", 1L, 1L) == ((3, 2)))
+    assert(counts(Snapshots.scan(spark, root,
+      Where.Dnf.all(Where.Range("t", 0L, 9L)))) == ((3, 2)))
+    assert(counts(Snapshots.scan(spark, root,
+      Where.Dnf.all(Where.Range("u", 1L, 1L)))) == ((3, 2)))
     // ...and a conjunctive predicate prunes MULTIPLICATIVELY: day 0 AND
     // u=1 admits the (0,1) dir + the null-t dir (bucket 1) only
-    assert(Snapshots.hiddenAutoMultiCounts(spark, root,
-      Seq(("t", 0L, 9L), ("u", 1L, 1L))) == ((2, 3)))
-    assert(Snapshots.readHiddenAutoMulti(spark, root,
-      Seq(("t", 0L, 9L), ("u", 1L, 1L)))
-      .select("k").as[Long].collect().toSet == Set(1L))
+    val day0u1 = Snapshots.scan(spark, root,
+      Where.Dnf.all(Where.Range("t", 0L, 9L), Where.Range("u", 1L, 1L)))
+    assert(counts(day0u1) == ((2, 3)))
+    assert(day0u1.frame.select("k").as[Long].collect().toSet == Set(1L))
     // deletes mask; rewrite preserves BOTH axes (tuple dirs + stats)
     Snapshots.commitDelete(Seq(Tuple1(2L)).toDF("k"), root, "k")
     Snapshots.commitRewrite(spark, root)
@@ -1203,12 +1248,12 @@ class ScaleSpec extends SparkSpec {
     // k=2's (0,2) tuple lost its only row — 4 surviving tuple dirs
     assert(cur2.dataDirs.size == 4, s"tuple layout must survive: ${cur2.dataDirs}")
     assert(cur2.deleteDirs.isEmpty)
-    assert(Snapshots.hiddenAutoMultiCounts(spark, root,
-      Seq(("t", 0L, 9L), ("u", 2L, 2L))) == ((0, 4)),
+    assert(counts(Snapshots.scan(spark, root, Where.Dnf.all(
+      Where.Range("t", 0L, 9L), Where.Range("u", 2L, 2L)))) == ((0, 4)),
       "post-rewrite conjunctive pruning must hold on both axes " +
         "(the null-t dir still carries its bucket line)")
-    assert(Snapshots.readHiddenAutoMulti(spark, root,
-      Seq(("t", 0L, 29L), ("u", 1L, 5L)))
+    assert(Snapshots.scan(spark, root, Where.Dnf.all(
+      Where.Range("t", 0L, 29L), Where.Range("u", 1L, 5L))).frame
       .select("k").as[Long].collect().toSet == Set(1L, 3L, 4L))
     assert(Snapshots.read(spark, root).count() == 4)
   }
@@ -1249,7 +1294,7 @@ class ScaleSpec extends SparkSpec {
         (0L until 40L).map(i => (d * 100L + i, s"v$d-$i")).toDF("k", "v")
           .repartition(1).sortWithinPartitions("k"), root)
     def ks(rowBp: Int, dirBp: Int) =
-      Snapshots.readSampled(spark, root, rowBp, dirBp)
+      Snapshots.readSampled(spark, root, rowBp, dirBp).frame
         .as[(Long, String)].collect().map(_._1).toSet
     val all = Snapshots.read(spark, root).as[(Long, String)]
       .collect().map(_._1).toSet
@@ -1263,13 +1308,14 @@ class ScaleSpec extends SparkSpec {
     assert(s30.nonEmpty && s30.size < all.size && s30.subsetOf(s60))
     assert(ks(0, 10000).isEmpty)
     // SYSTEM: surviving dirs are whole; counts agree with content
-    val (opened, skipped) = Snapshots.sampleCounts(spark, root, 5000)
+    val half = Snapshots.readSampled(spark, root, dirRateBp = 5000)
+    val (opened, skipped) = counts(half)
     assert(opened + skipped == 3)
-    val sys = ks(10000, 5000)
+    val sys = half.frame.as[(Long, String)].collect().map(_._1).toSet
     assert(sys.size == opened * 40,
       s"system tier must keep whole dirs: ${sys.size} vs $opened dirs")
     // every dir skipped → empty frame in the table's schema
-    val none = Snapshots.readSampled(spark, root, 10000, 0)
+    val none = Snapshots.readSampled(spark, root, 10000, 0).frame
     assert(none.columns.toSeq == Seq("k", "v") && none.isEmpty)
     // deletes mask AFTER the draw: a sampled row that is deleted is gone
     val victim = s30.head
@@ -1297,19 +1343,22 @@ class ScaleSpec extends SparkSpec {
     Snapshots.commitAppend(
       Seq((300L, "bare")).toDF("k", "v"), root) // no bloom: always opened
     def point(v: Long) =
-      Snapshots.readPoint(spark, root, "k", v).as[(Long, String)].collect().toSet
+      Snapshots.scan(spark, root,
+        Where.Point("k", v)).frame.as[(Long, String)].collect().toSet
     // a value in dir 2: dirs 1/3 bloom-skip, bare dir opens
-    assert(Snapshots.pointCounts(spark, root, "k", 120L) == ((2, 2)))
+    assert(counts(Snapshots.scan(spark, root,
+      Where.Point("k", 120L))) == ((2, 2)))
     assert(point(120L) == Set((120L, "b120")))
     // a value absent everywhere: every bloom'd dir skips
-    assert(Snapshots.pointCounts(spark, root, "k", 999L) == ((1, 3)))
+    assert(counts(Snapshots.scan(spark, root,
+      Where.Point("k", 999L))) == ((1, 3)))
     assert(point(999L).isEmpty)
-    // ONE-SIDED error sweep: readPoint == full filtered read for every
+    // ONE-SIDED error sweep: a Point scan == full filtered read for every
     // present key (a Bloom may open extra dirs, it may never lose a row)
     for (v <- Seq(1L, 50L, 100L, 150L, 200L, 250L, 300L)) {
       val full = Snapshots.read(spark, root).filter(col("k") === v)
         .as[(Long, String)].collect().toSet
-      assert(point(v) == full, s"readPoint lost rows for k=$v")
+      assert(point(v) == full, s"Point scan lost rows for k=$v")
     }
     // equality deletes still mask under point skipping
     Snapshots.commitDelete(Seq(Tuple1(120L)).toDF("k"), root, "k")
@@ -1318,20 +1367,23 @@ class ScaleSpec extends SparkSpec {
     Snapshots.commitMerge(Seq((400L, "m")).toDF("k", "v"), root, "k")
     val merged = Snapshots.current(spark, root).get
     assert(merged.blooms.size == 4, s"merge payload must carry a bloom: ${merged.blooms}")
-    assert(Snapshots.pointCounts(spark, root, "k", 400L) == ((2, 3)))
+    assert(counts(Snapshots.scan(spark, root,
+      Where.Point("k", 400L))) == ((2, 3)))
     assert(point(400L) == Set((400L, "m")))
     // REWRITE rebuilds the bloom on the single rewritten dir
     Snapshots.commitRewrite(spark, root)
     val rw = Snapshots.current(spark, root).get
     assert(rw.blooms.size == 1 && rw.blooms.values.head == Seq("k"))
-    assert(Snapshots.pointCounts(spark, root, "k", 999L) == ((0, 1)))
+    assert(counts(Snapshots.scan(spark, root,
+      Where.Point("k", 999L))) == ((0, 1)))
     assert(point(200L) == Set((200L, "c200")))
     // a marked bloom whose sidecar vanished degrades to OPEN, not error
     val dirName = rw.blooms.keys.head
     val side = new org.apache.hadoop.fs.Path(root, s"$dirName/_bloom_k")
     side.getFileSystem(spark.sparkContext.hadoopConfiguration)
       .delete(side, false)
-    assert(Snapshots.pointCounts(spark, root, "k", 999L) == ((1, 0)))
+    assert(counts(Snapshots.scan(spark, root,
+      Where.Point("k", 999L))) == ((1, 0)))
     assert(point(200L) == Set((200L, "c200")))
   }
 
@@ -1399,7 +1451,8 @@ class ScaleSpec extends SparkSpec {
     // history preserved: the rolled-over delete snapshot still reads
     assert(ks(Snapshots.read(spark, root, Some(id2))) == Set(1L, 3L))
     // stats ride the rollback manifest: pruning still works on the head
-    val (opened, skipped) = Snapshots.pruneCounts(spark, root, "k", 99L, 100L)
+    val (opened, skipped) = counts(Snapshots.scan(spark, root,
+      Where.Range("k", 99L, 100L)))
     assert(opened == 0 && skipped == 1, s"stats lost: $opened/$skipped")
     // commits continue on top; rollback-of-rollback returns to the
     // intermediate (post-delete) state
@@ -1441,11 +1494,13 @@ class ScaleSpec extends SparkSpec {
     assert(Snapshots.read(spark, root, Some(id1)).columns.toSeq ==
       Seq("k", "v", "x"))
     // range stats were remapped: pruning on the NEW name skips the old dir
-    assert(Snapshots.pruneCounts(spark, root, "value", 25L, 40L) == ((1, 1)))
+    assert(counts(Snapshots.scan(spark, root,
+      Where.Range("value", 25L, 40L))) == ((1, 1)))
     // bloom skipping on the NEW name consults the old dir's physical
     // sidecar (_bloom_v): value=10 opens dir1 only (ranges exclude dir2)
-    assert(Snapshots.pointCounts(spark, root, "value", 10L) == ((1, 1)))
-    assert(Snapshots.readPoint(spark, root, "value", 10L)
+    assert(counts(Snapshots.scan(spark, root,
+      Where.Point("value", 10L))) == ((1, 1)))
+    assert(Snapshots.scan(spark, root, Where.Point("value", 10L)).frame
       .select("k").as[Long].collect().toSeq == Seq(1L))
     // rename CHAIN: value -> val2; both hops apply to the oldest dir
     Snapshots.commitRenameColumn(spark, root, "value", "val2")
@@ -1494,13 +1549,16 @@ class ScaleSpec extends SparkSpec {
     assert(Snapshots.current(spark, root).get.dataDirs.size == 4)
     // raw predicate [0,9] → value-0 dir opens, the stats-less null dir
     // ALWAYS opens (degrade-safe), values 1 and 2 skip
-    assert(Snapshots.hiddenRangeCounts(spark, root, t10, 0L, 9L) == ((2, 2)))
-    assert(Snapshots.readHiddenRange(spark, root, t10, 0L, 9L)
+    assert(counts(Snapshots.scan(spark, root,
+      Where.Hidden(t10, Where.Range("v", 0L, 9L)))) == ((2, 2)))
+    assert(Snapshots.scan(spark, root,
+      Where.Hidden(t10, Where.Range("v", 0L, 9L))).frame
       .select("k").as[Long].collect().toSet == Set(1L, 4L))
     // later commits add dirs; equality deletes mask across hidden dirs
     Snapshots.commitAppendHidden(Seq((6L, Some(8L))).toDF("k", "v"), root, t10)
     Snapshots.commitDelete(Seq(Tuple1(4L)).toDF("k"), root, "k")
-    assert(Snapshots.readHiddenRange(spark, root, t10, 0L, 9L)
+    assert(Snapshots.scan(spark, root,
+      Where.Hidden(t10, Where.Range("v", 0L, 9L))).frame
       .select("k").as[Long].collect().toSet == Set(1L, 6L))
     // the plain read sees everything, incl. the null-value row
     assert(Snapshots.read(spark, root).count() == 5)
@@ -1511,12 +1569,16 @@ class ScaleSpec extends SparkSpec {
       Seq((1L, 3L), (2L, 7L), (3L, 4L), (4L, 11L)).toDF("k", "v"), broot, b4)
     // buckets: 3,3,0,3 → two dirs
     assert(Snapshots.current(spark, broot).get.dataDirs.size == 2)
-    assert(Snapshots.hiddenPointCounts(spark, broot, b4, 7L) == ((1, 1)))
-    assert(Snapshots.readHiddenPoint(spark, broot, b4, 7L)
+    assert(counts(Snapshots.scan(spark, broot,
+      Where.Hidden(b4, Where.Point("v", 7L)))) == ((1, 1)))
+    assert(Snapshots.scan(spark, broot,
+      Where.Hidden(b4, Where.Point("v", 7L))).frame
       .select("k").as[Long].collect().toSeq == Seq(2L))
     // an unoccupied bucket opens NOTHING and returns the empty frame
-    assert(Snapshots.hiddenPointCounts(spark, broot, b4, 5L) == ((0, 2)))
-    assert(Snapshots.readHiddenPoint(spark, broot, b4, 5L).count() == 0)
+    assert(counts(Snapshots.scan(spark, broot,
+      Where.Hidden(b4, Where.Point("v", 5L)))) == ((0, 2)))
+    assert(Snapshots.scan(spark, broot,
+      Where.Hidden(b4, Where.Point("v", 5L))).frame.count() == 0)
   }
 
   test("schema-evolution model test: random rename/drop/add/append/delete/rewrite sequences match a reference simulation") {
@@ -1604,7 +1666,7 @@ class ScaleSpec extends SparkSpec {
     }
   }
 
-  test("hidden partitioning property: readHiddenRange == read().filter for random ranges") {
+  test("hidden partitioning property: a Hidden scan == read().filter for random ranges") {
     import graft.ops.Snapshots
     import graft.ops.Snapshots.TruncateTransform
     import spark.implicits._
@@ -1626,11 +1688,70 @@ class ScaleSpec extends SparkSpec {
     for (_ <- 1 to 12) {
       val lo = nextInt(50).toLong
       val hi = lo + nextInt(20)
-      val fast = Snapshots.readHiddenRange(spark, root, t, lo, hi)
+      val fast = Snapshots.scan(spark, root,
+        Where.Hidden(t, Where.Range("v", lo, hi))).frame
         .select("k").as[Long].collect().toSet
       val slow = Snapshots.read(spark, root)
         .filter($"v".between(lo, hi)).select("k").as[Long].collect().toSet
       assert(fast == slow, s"range [$lo,$hi] diverged")
+    }
+  }
+
+  test("snapshots: a scan's (opened, skipped) match the data dirs its executed plan reads") {
+    import graft.ops.Snapshots
+    import graft.ops.Snapshots.TruncateTransform
+    import org.apache.spark.sql.execution.{FileSourceScanExec, SparkPlan}
+    import org.apache.spark.sql.execution.adaptive.QueryStageExec
+    import spark.implicits._
+    val root = java.nio.file.Files.createTempDirectory("snapscan").toString
+    def rows(ks: Seq[Long]) =
+      ks.map(k => (k, f"id$k%03d", k * 7 % 50)).toDF("k", "s", "h")
+    // Long stats + string bounds on every dir but the hidden and bare ones
+    Snapshots.commitAppendStats(rows(1L to 10L), root, Seq("k", "s"), None)
+    Snapshots.commitAppendStats(rows(11L to 20L), root, Seq("k", "s"), None)
+    // overlapping ranges, one Bloom on k and one on s
+    Snapshots.commitAppendBloom(rows((21L to 60L).filter(_ % 2 == 0)), root,
+      bloomCol = "k", statsCols = Seq("k", "s"))
+    Snapshots.commitAppendBloom(rows((21L to 60L).filter(_ % 2 == 1)), root,
+      bloomCol = "s", statsCols = Seq("k", "s"))
+    // one dir per h div 10, carrying only the transform value
+    val t10 = TruncateTransform("h", 10L)
+    Snapshots.commitAppendHidden(rows(61L to 90L), root, t10)
+    Snapshots.commitAppend(rows(91L to 95L), root) // no metadata at all
+    Snapshots.commitDelete(Seq(5L, 64L).toDF("k"), root, "k")
+    val table = Snapshots.current(spark, root).get.dataDirs.size
+    // distinct data dirs under the executed plan's file scans; the
+    // delete dirs' scans (delete/...) are not data dirs
+    def dirsRead(df: org.apache.spark.sql.DataFrame): Int = {
+      df.queryExecution.toRdd.count()
+      def deep(p: SparkPlan): Seq[SparkPlan] = p +: (p match {
+        case a: AdaptiveSparkPlanExec => deep(a.executedPlan)
+        case q: QueryStageExec => deep(q.plan)
+        case _ => (p.children ++ p.subqueries).flatMap(deep)
+      })
+      deep(df.queryExecution.executedPlan)
+        .collect { case f: FileSourceScanExec => f.relation.location.rootPaths }
+        .flatten.filter(_.getParent.getName == "data").map(_.getName)
+        .distinct.size
+    }
+    val scans = Seq(
+      "Range" -> Snapshots.scan(spark, root, Where.Range("k", 12L, 25L)),
+      "StrRange" -> Snapshots.scan(spark, root,
+        Where.StrRange("s", "id002", "id008")),
+      "Point" -> Snapshots.scan(spark, root, Where.Point("k", 42L)),
+      "StrPoint" -> Snapshots.scan(spark, root, Where.StrPoint("s", "id044")),
+      "Hidden" -> Snapshots.scan(spark, root,
+        Where.Hidden(t10, Where.Range("h", 0L, 9L))),
+      "Dnf" -> Snapshots.scan(spark, root, Where.Dnf(Seq(
+        Seq(Where.Range("k", 61L, 90L), Where.Range("h", 20L, 29L)),
+        Seq(Where.Range("k", 61L, 90L), Where.Point("h", 43L))))),
+      "system sample" -> Snapshots.readSampled(spark, root, dirRateBp = 5000),
+      "empty sample" -> Snapshots.readSampled(spark, root, dirRateBp = 0))
+    for ((name, sc) <- scans) {
+      assert(sc.opened + sc.skipped == table, s"$name: ${counts(sc)} of $table")
+      assert(dirsRead(sc.frame) == sc.opened,
+        s"$name: plan reads ${dirsRead(sc.frame)} dirs, scan counts ${counts(sc)}")
+      assert(sc.skipped > 0, s"$name must skip something to prove anything")
     }
   }
 
@@ -1752,18 +1873,18 @@ class ScaleSpec extends SparkSpec {
     // values: phs0 (x2 rows, 1 dir), phs1, stu0, null dir
     assert(cur.dataDirs.size == 4, s"per-prefix dirs: ${cur.dataDirs}")
     // range confined to the phs0 prefix opens phs0 + the null dir only
-    assert(Snapshots.hiddenRangeStrCounts(spark, root, t4,
-      "phs000000", "phs000999") == ((2, 2)))
-    assert(Snapshots.readHiddenRangeStr(spark, root, t4,
-      "phs000000", "phs000999").select("n").as[Long]
-      .collect().toSet == Set(1L, 2L))
+    val phs0 = Snapshots.scan(spark, root,
+      Where.Hidden(t4, Where.StrRange("id", "phs000000", "phs000999")))
+    assert(counts(phs0) == ((2, 2)))
+    assert(phs0.frame.select("n").as[Long].collect().toSet == Set(1L, 2L))
     // prefix-EQUAL bounds (lo == hi == a full prefix): one value dir
-    assert(Snapshots.readHiddenRangeStr(spark, root, t4,
-      "phs111222", "phs111222").select("n").as[Long]
-      .collect().toSet == Set(3L))
+    assert(Snapshots.scan(spark, root,
+      Where.Hidden(t4, Where.StrRange("id", "phs111222", "phs111222"))).frame
+      .select("n").as[Long].collect().toSet == Set(3L))
     // result equals the unpruned filter for a cross-prefix range
-    assert(Snapshots.readHiddenRangeStr(spark, root, t4,
-      "phs000500", "stu999999").select("n").as[Long].collect().toSet ==
+    assert(Snapshots.scan(spark, root,
+      Where.Hidden(t4, Where.StrRange("id", "phs000500", "stu999999"))).frame
+      .select("n").as[Long].collect().toSet ==
       Snapshots.read(spark, root)
         .filter("id between 'phs000500' and 'stu999999'")
         .select("n").as[Long].collect().toSet)
@@ -1776,12 +1897,13 @@ class ScaleSpec extends SparkSpec {
         .toDF("id", "n"), root2, t3)
     // "é" = 0xC3A9: an ASCII-only range must not open its dir; the
     // multi-byte dir still opens for a covering range
-    val all = Snapshots.readHiddenRangeStr(spark, root2, t3, "", "￿￿")
+    val all = Snapshots.scan(spark, root2,
+      Where.Hidden(t3, Where.StrRange("id", "", "￿￿"))).frame
     assert(all.select("n").as[Long].collect().toSet == Set(0L, 1L, 2L, 3L, 4L))
-    assert(Snapshots.readHiddenRangeStr(spark, root2, t3, "", "b")
-      .select("n").as[Long].collect().toSet == Set(0L, 1L))
-    val (oAscii, sAscii) =
-      Snapshots.hiddenRangeStrCounts(spark, root2, t3, "", "b")
+    val ascii = Snapshots.scan(spark, root2,
+      Where.Hidden(t3, Where.StrRange("id", "", "b")))
+    assert(ascii.frame.select("n").as[Long].collect().toSet == Set(0L, 1L))
+    val (oAscii, sAscii) = counts(ascii)
     assert(oAscii == 2 && sAscii == 3,
       s"ASCII range must skip the multi-byte dirs: ($oAscii, $sAscii)")
     // 3) md5-48 string bucket: a point lookup opens one bucket
@@ -1791,17 +1913,20 @@ class ScaleSpec extends SparkSpec {
       (1 to 40).map(i => (s"doc$i", i.toLong)).toDF("id", "n"), root3, b4)
     val dirs3 = Snapshots.current(spark, root3).get.dataDirs.size
     assert(dirs3 >= 2 && dirs3 <= 4, s"bucket dirs: $dirs3")
-    val (op, sk) = Snapshots.hiddenPointStrCounts(spark, root3, b4, "doc7")
+    val doc7 = Snapshots.scan(spark, root3,
+      Where.Hidden(b4, Where.StrPoint("id", "doc7")))
+    val (op, sk) = counts(doc7)
     assert(op == 1 && sk == dirs3 - 1)
-    assert(Snapshots.readHiddenPointStr(spark, root3, b4, "doc7")
-      .select("n").as[Long].collect().toSeq == Seq(7L))
+    assert(doc7.frame.select("n").as[Long].collect().toSeq == Seq(7L))
     // 4) the spec is a FIRST-CLASS spec: rewrite preserves it, rename
     // of the source column is refused
     Snapshots.commitDelete(Seq(Tuple1("doc7")).toDF("id"), root3, "id")
     Snapshots.commitRewrite(spark, root3)
-    assert(Snapshots.readHiddenPointStr(spark, root3, b4, "doc8")
+    assert(Snapshots.scan(spark, root3,
+      Where.Hidden(b4, Where.StrPoint("id", "doc8"))).frame
       .select("n").as[Long].collect().toSeq == Seq(8L))
-    assert(Snapshots.readHiddenPointStr(spark, root3, b4, "doc7").count() == 0)
+    assert(Snapshots.scan(spark, root3,
+      Where.Hidden(b4, Where.StrPoint("id", "doc7"))).frame.count() == 0)
     intercept[IllegalArgumentException] {
       Snapshots.commitRenameColumn(spark, root3, "id", "key")
     }
@@ -1815,8 +1940,9 @@ class ScaleSpec extends SparkSpec {
       // finds no truncstr stats → opens everything, stays exact
       // (skipping is only ever an optimization)
       val t = TruncateStrTransform("id", 4)
-      val pruned = Snapshots.readHiddenRangeStr(spark, root3, t,
-        lo, hi).select("n").as[Long].collect().toSet
+      val pruned = Snapshots.scan(spark, root3,
+        Where.Hidden(t, Where.StrRange("id", lo, hi))).frame
+        .select("n").as[Long].collect().toSet
       val plain = Snapshots.read(spark, root3)
         .filter(s"id between '$lo' and '$hi'")
         .select("n").as[Long].collect().toSet
@@ -1861,22 +1987,21 @@ class ScaleSpec extends SparkSpec {
     (1 to 12).foreach { _ =>
       val nDisj = 1 + rnd.nextInt(3)
       val disjuncts = (1 to nDisj).map { _ =>
-        val conj = scala.collection.mutable.ListBuffer
-          .empty[(String, Long, Long)]
+        val conj = scala.collection.mutable.ListBuffer.empty[Where.Bounded]
         if (rnd.nextBoolean()) {
           val lo = rnd.nextInt(100).toLong
-          conj += (("t", lo, lo + rnd.nextInt(30)))
+          conj += Where.Range("t", lo, lo + rnd.nextInt(30))
         }
         if (rnd.nextBoolean() || conj.isEmpty) {
           val v = rnd.nextInt(17).toLong
-          conj += (("k", v, v))
+          conj += Where.Range("k", v, v)
         }
         conj.toList
       }
-      val viaDisj = Snapshots.readHiddenAutoDisj(spark, root, disjuncts)
+      val viaDisj = Snapshots.scan(spark, root, Where.Dnf(disjuncts)).frame
         .select("id").as[Long].collect().toSet
       val filter = disjuncts.map(c =>
-        c.map(p => col(p._1).between(p._2, p._3)).reduce(_ && _))
+        c.map(p => col(p.column).between(p.lo, p.hi)).reduce(_ && _))
         .reduce(_ || _)
       val plain = Snapshots.read(spark, root).filter(filter)
         .select("id").as[Long].collect().toSet
@@ -1884,16 +2009,16 @@ class ScaleSpec extends SparkSpec {
     }
     // IN-list on the bucket axis: opened = occupied (day × residue)
     // pairs any listed residue admits; never the whole table
-    val (o, s0) = Snapshots.hiddenAutoInCounts(spark, root, "k",
-      Seq(0L, 5L))
+    val (o, s0) = counts(Snapshots.scan(spark, root,
+      Where.Dnf.in("k", Seq(0L, 5L))))
     assert(o > 0 && s0 > 0, s"IN-list must skip some dirs: ($o, $s0)")
-    assert(Snapshots.readHiddenAutoIn(spark, root, "k", Seq(0L, 5L))
+    assert(Snapshots.scan(spark, root, Where.Dnf.in("k", Seq(0L, 5L))).frame
       .select("id").as[Long].collect().toSet ==
       Snapshots.read(spark, root).filter("k in (0, 5)")
         .select("id").as[Long].collect().toSet)
     // degenerate: an all-excluding DNF returns the empty typed frame
-    assert(Snapshots.readHiddenAutoDisj(spark, root,
-      Seq(Seq(("t", 5000L, 6000L)))).count() == 0)
+    assert(Snapshots.scan(spark, root, Where.Dnf(
+      Seq(Seq(Where.Range("t", 5000L, 6000L))))).frame.count() == 0)
   }
 
   test("snapshots: grouped manifest scan — plan is O(delete commits + schema ops), not O(dirs); reads stay exact (round-18)") {
@@ -1932,10 +2057,11 @@ class ScaleSpec extends SparkSpec {
     // pruning composes: a one-dir slice opens 1 grouped relation that
     // reads the surviving dirs only (runs split at the pruned gaps is
     // NOT required — skipped dirs just leave the run)
-    val sliced = Snapshots.readPruned(spark, root, "k", 10L, 12L)
+    val sliced = Snapshots.scan(spark, root, Where.Range("k", 10L, 12L)).frame
     assert(sliced.select("k").as[Long].collect().toSet ==
       Set(10L, 11L, 12L))
-    val (opened, skipped) = Snapshots.pruneCounts(spark, root, "k", 10L, 12L)
+    val (opened, skipped) = counts(Snapshots.scan(spark, root,
+      Where.Range("k", 10L, 12L)))
     assert(opened == 3 && skipped == 72)
     // position deletes still mask exactly through the derived _dir
     val addr = Snapshots.readWithPos(spark, root)
